@@ -84,10 +84,16 @@ _WINDOW = [
     "minhash_incremental_pairs", "simhash", "ngram_jaccard_pairs",
     "lang_id", "quality_score", "token_count", "doc_fingerprint",
     "quality_gopher",
-    # module-stale: queries_quality.py (dup_word_micro long cast, r5)
-    "chunk_dedup", "repetition_ratio",
-    # module-stale: queries_fulltext.py (bm25 empty-corpus guard, r5)
-    "text_match_topk", "text_bm25_topk", "docs_with_children",
+    # (chunk_dedup / repetition_ratio of queries_quality.py and
+    # text_match_topk / docs_with_children of queries_fulltext.py rotated
+    # out: r5-green, modules unchanged since — their slots admit the four
+    # queries the pop-key dedup edit made module-stale; text_bm25_topk
+    # stays as a flagship)
+    "text_bm25_topk",
+    # module-stale: streaming/ingest.py (arrival-offset first-wins) and
+    # queries_pipeline.py (crank comment)
+    "request_ingest", "streaming_window_counts",
+    "content_type_filter", "multimodal_features",
     # module-stale: queries_pipeline.py / queries_media.py edits (r3/r4)
     # whose greens predate them — the holes the old rotation never saw
     "cache_rewrite", "duration_normalize", "headers_multimap",

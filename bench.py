@@ -288,17 +288,11 @@ def run_bigseen_bench(n_seen: int, n_cands: int) -> dict:
     out["bloom_suspects"] = suspects
     out["bloom_join_skip_frac"] = round(1 - suspects / n_cands, 4)
     out["bloom_bits_per_block"] = bits
-    # round-5 gate evidence: the path the engine actually picks (the
-    # seen table here is scannable, so the gate must choose exact — and
-    # the chosen path's time must be <= the alternatives')
-    from openslack_crawler_spark.operators.seen_filter import choose_unseen_path
-
-    chosen = (
-        "exact_spj" if choose_unseen_path(seen_scannable=True) == "exact"
-        else "bloom_spj"
-    )
-    out["chosen_path"] = chosen
-    out["chosen_sec"] = out[chosen]["sec"]
+    # the path the engine runs by default (CrawlConfig.use_bloom=False:
+    # the seen table here is scannable, so exact — and its time must be
+    # <= the alternatives')
+    out["chosen_path"] = "exact_spj"
+    out["chosen_sec"] = out["exact_spj"]["sec"]
     spark.sql("DROP TABLE IF EXISTS bigseen")
     _sh.rmtree(f"{wh}/bigseen", ignore_errors=True)
     _sh.rmtree(blocks_path, ignore_errors=True)

@@ -14,9 +14,9 @@ Spark rebuild (SURVEY.md §2.2 F1-F3, §4 O2/O7):
 - truth = exact `left_anti` join of candidate url_hash vs the seen
   table (north_rule demands URL-seen SET EQUALITY, so the bloom is only
   ever a prefilter, never the decider).
-- intra-batch first-wins = row_number over (url_hash) ordered by
-  enqueue_seq (sequential SADD order), not dropDuplicates (which is
-  pick-any).
+- intra-batch first-wins = min_by per url_hash of the caller's order
+  key (enqueue_seq, or the round's pop order — sequential SADD order),
+  not dropDuplicates (which is pick-any).
 - bloom = per-block numpy bitmaps maintained with cogrouped
   applyInPandas: candidates and bitmap blocks are hash-partitioned on
   block_id, so the probe is a co-located vectorized pass — the Spark
@@ -30,8 +30,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # scale knobs (documented: at 10^10 URLs run 4096 blocks × 2^33 bits)
 DEFAULT_NUM_BLOCKS = 32
@@ -39,17 +40,43 @@ DEFAULT_BITS_PER_BLOCK = 1 << 24  # 2 MiB/block in tests; 2^33 (1 GiB) at 10^10
 NUM_HASHES = 7  # parity with bloomfilter.py:36 (7 SimpleHash seeds)
 
 
-def first_wins_dedup(cands: DataFrame, seq_col: str = "enqueue_seq") -> DataFrame:
+def _bypass_flagged(cands: DataFrame, subject_fn) -> DataFrame:
+    """Run a dedup step over the rows it applies to: `dont_filter` rows
+    bypass it (scheduler.py:73) and are unioned back unchanged.
+
+    The subject branch re-attaches `dont_filter` as lit(False) — true
+    by construction for every subject row, and it lets Catalyst PRUNE
+    the filter/union split that a later dedup step builds on top (with
+    the flag buried in the first-wins agg struct, the optimizer could
+    not prove the flagged branch empty and duplicated the entire
+    aggregate subtree — two extra Exchanges of the full batch in the
+    round-5 scheduling-round plan)."""
+    if "dont_filter" not in cands.columns:
+        return subject_fn(cands)
+    kept = (
+        subject_fn(cands.filter(~F.col("dont_filter")).drop("dont_filter"))
+        .withColumn("dont_filter", F.lit(False))
+        .select(*cands.columns)
+    )
+    return kept.unionByName(cands.filter(F.col("dont_filter")))
+
+
+def first_wins_dedup(cands: DataFrame, order="enqueue_seq") -> DataFrame:
     """Intra-batch dedup keeping the FIRST enqueued duplicate — the
     set-oriented equivalent of sequential SADD (dupefilter.py:39-44).
     Rows with dont_filter=True bypass (scheduler.py:73).
 
-    API contract (advisor r5): `url_hash` and `seq_col` must be NON-NULL
-    and `seq_col` UNIQUE per row — a seq tie would make the kept row
-    nondeterministic, and NULL keys degenerate (r5's min_by ignored
-    NULL-seq rows; the r6 winners join drops NULL-hash rows). Every
-    in-repo caller passes generated non-null hashes and a row-unique
-    sequence.
+    `order` is the first-wins key, a column name or a Column, as in
+    F.min_by: the row with the smallest key per url_hash is kept. A
+    multi-part key is a struct, ascending per field, so a descending
+    component is negated — the round passes its pop order
+    struct(-parent_score, parent_seq, anchor_offset) directly.
+
+    API contract: `url_hash` and `order` must be NON-NULL, and `order`
+    UNIQUE within a url_hash group — a tie would make the kept row
+    nondeterministic, and NULL keys degenerate (min_by ignores NULL-key
+    rows; the groupBy keeps a NULL url_hash as one group). Every in-repo
+    caller passes generated non-null hashes and a row-unique key.
 
     Round-6 shape (A/B-measured at 32M rows / local[32], see
     OPTIMIZATION_r06.md): repartition by url_hash FIRST, then run the
@@ -64,41 +91,34 @@ def first_wins_dedup(cands: DataFrame, seq_col: str = "enqueue_seq") -> DataFram
     disqualified — its second plan branch re-runs the upstream
     canonicalizer. The dedup output stays hash-partitioned on url_hash,
     so the downstream seen anti-join reuses the partitioning with no
-    further Exchange.
+    further Exchange."""
+    key = F.col(order) if isinstance(order, str) else order
 
-    The kept branch re-attaches `dont_filter` as lit(False) — true by
-    construction for every subject row, and it lets Catalyst PRUNE the
-    downstream filter/union split that a later filter_unseen() builds
-    (with the flag buried in the agg struct, the optimizer could not
-    prove the flagged branch empty and duplicated the entire aggregate
-    subtree — two extra Exchanges of the full batch in the round-5
-    scheduling-round plan)."""
-    has_flag = "dont_filter" in cands.columns
-    flagged = cands.filter(F.col("dont_filter")) if has_flag else None
-    subject = cands.filter(~F.col("dont_filter")) if has_flag else cands
-    part = subject.repartition(F.col("url_hash"))
-    others = [
-        c for c in subject.columns
-        if c != "url_hash" and not (has_flag and c == "dont_filter")
-    ]
-    sel = []
-    for c in subject.columns:
-        if c == "url_hash":
-            sel.append(F.col("url_hash"))
-        elif has_flag and c == "dont_filter":
-            sel.append(F.lit(False).alias("dont_filter"))
-        else:
-            sel.append(F.col(f"_r.{c}").alias(c))
-    kept = (
-        part.groupBy("url_hash")
-        .agg(F.min_by(F.struct(*others), F.col(seq_col)).alias("_r"))
-        .select(*sel)
+    def dedup(subject: DataFrame) -> DataFrame:
+        others = [c for c in subject.columns if c != "url_hash"]
+        return (
+            subject.repartition(F.col("url_hash"))
+            .groupBy("url_hash")
+            .agg(F.min_by(F.struct(*others), key).alias("_r"))
+            .select(
+                *[F.col("url_hash") if c == "url_hash" else F.col(f"_r.{c}").alias(c)
+                  for c in subject.columns]
+            )
+        )
+
+    return _bypass_flagged(cands, dedup)
+
+
+def filter_unseen(cands: DataFrame, seen: DataFrame) -> DataFrame:
+    """Exact dedup: candidates whose url_hash is NOT in the seen table.
+    dont_filter rows bypass. Catalyst/AQE picks SMJ vs broadcast."""
+    return _bypass_flagged(
+        cands, lambda subject: subject.join(seen.select("url_hash"), "url_hash", "left_anti")
     )
-    return kept.unionByName(flagged) if has_flag else kept
 
 
 # --------------------------------------------------------------------------
-# Bloom cost gate (round 5): when does the prefilter actually win?
+# Why the bloom prefilter is opt-in (CrawlConfig.use_bloom defaults False)
 #
 # Two rounds of bigseen measurements (200M seen / 1M candidates, local[32])
 # say the bloom prefilter LOSES whenever the exact anti-join can scan the
@@ -118,43 +138,9 @@ def first_wins_dedup(cands: DataFrame, seq_col: str = "enqueue_seq") -> DataFram
 # set too large to keep join-materialized, where the resident ~1 bit/URL
 # bitmap (28 GiB at 10^10 URLs vs ~80 GiB+ compressed table scan) answers
 # the 99% definite-negatives without touching the table. That is a
-# DEPLOYMENT property, not a row-count crossover — so the gate keys on it
-# explicitly instead of pretending a threshold exists in (n_seen, n_cands)
-# space that the data says does not.
-# --------------------------------------------------------------------------
-
-
-def choose_unseen_path(seen_scannable: bool = True) -> str:
-    """'exact' | 'bloom' — the predicted-winner gate for the URL-seen
-    check (VERDICT r4 "What's wrong" #3). See the calibration note
-    above: exact wins at every measured operating point where the seen
-    table is scannable; the bloom path is reserved for deployments
-    where it is not."""
-    return "exact" if seen_scannable else "bloom"
-
-
-def unseen_auto(
-    cands: DataFrame,
-    seen: DataFrame,
-    blocks: DataFrame | None = None,
-    seen_scannable: bool = True,
-) -> DataFrame:
-    """Gated URL-seen filter: exact anti-join unless the gate predicts
-    the bloom prefilter wins (never-scannable seen side) AND bitmap
-    blocks are available."""
-    if choose_unseen_path(seen_scannable) == "bloom" and blocks is not None:
-        return PartitionedBloom().prefiltered_unseen(cands, seen, blocks)
-    return filter_unseen(cands, seen)
-
-
-def filter_unseen(cands: DataFrame, seen: DataFrame) -> DataFrame:
-    """Exact dedup: candidates whose url_hash is NOT in the seen table.
-    dont_filter rows bypass. Catalyst/AQE picks SMJ vs broadcast."""
-    has_flag = "dont_filter" in cands.columns
-    flagged = cands.filter(F.col("dont_filter")) if has_flag else None
-    subject = cands.filter(~F.col("dont_filter")) if has_flag else cands
-    unseen = subject.join(seen.select("url_hash"), "url_hash", "left_anti")
-    return unseen.unionByName(flagged) if has_flag else unseen
+# DEPLOYMENT property, not a row-count crossover, and the crawl store's
+# seen table is always a scannable snapshot — so exact is the default and
+# the bloom is an explicit deployment choice.
 
 
 # --------------------------------------------------------------------------
@@ -245,7 +231,9 @@ class PartitionedBloom:
         """Append `maybe_seen boolean` to candidates via a co-located
         cogrouped pass: both sides hash-partitioned on block_id, the
         bitmap travels once per block, membership tested vectorized."""
-        out_schema = cands.schema.add("maybe_seen", "boolean")
+        # a new StructType: StructType.add would mutate the schema that
+        # `cands` caches, so cands.columns would list maybe_seen after
+        out_schema = T.StructType([*cands.schema.fields, T.StructField("maybe_seen", T.BooleanType())])
         cols = cands.columns
         test = self._test_bits
 
@@ -272,12 +260,13 @@ class PartitionedBloom:
         """bloom prefilter → exact anti-join only for possible positives.
         Semantically identical to filter_unseen (bloom has no false
         negatives); the definite-negative fast path skips the shuffle."""
-        has_flag = "dont_filter" in cands.columns
-        flagged = cands.filter(F.col("dont_filter")) if has_flag else None
-        subject = cands.filter(~F.col("dont_filter")) if has_flag else cands
-        probed = self.probe(subject, blocks)
-        fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        suspect = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        confirmed_new = suspect.join(seen.select("url_hash"), "url_hash", "left_anti")
-        out = fresh.unionByName(confirmed_new)
-        return out.unionByName(flagged) if has_flag else out
+
+        def unseen(subject: DataFrame) -> DataFrame:
+            probed = self.probe(subject, blocks)
+            fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
+            suspect = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+            return fresh.unionByName(
+                suspect.join(seen.select("url_hash"), "url_hash", "left_anti")
+            )
+
+        return _bypass_flagged(cands, unseen)

@@ -44,24 +44,12 @@ from ..operators.linkextract import (
 from ..operators.components import _ckpt
 from ..operators.seen_filter import (
     PartitionedBloom,
-    choose_unseen_path,
     filter_unseen,
     first_wins_dedup,
 )
-
-
 from ..operators.sequence import with_dense_seq
 from ..sources.table_format import SnapshotParquetFormat
 from ..functions.url import with_url_columns
-
-
-def _bloom_enabled(cfg) -> bool:
-    """Resolve CrawlConfig.use_bloom: explicit True/False wins; "auto"
-    asks the calibrated gate (exact beats bloom whenever the snapshot
-    store's seen table is scannable — which, here, it always is)."""
-    if cfg.use_bloom == "auto":
-        return choose_unseen_path(seen_scannable=True) == "bloom"
-    return bool(cfg.use_bloom)
 
 
 def fetch_order():
@@ -80,12 +68,11 @@ class CrawlConfig:
     maxdepth: int = 2            # scraper_schema.json:22-26 caps at 3
     salt_buckets: int = 16
     # URL-seen path: False = exact anti-join (the measured winner at
-    # every scannable operating point — seen_filter.choose_unseen_path),
-    # True = maintain + use the bloom prefilter (only for deployments
-    # whose seen side is not scannable at join time), "auto" = let the
-    # gate decide (resolves to exact here: the crawl store's seen table
-    # is always a local parquet snapshot)
-    use_bloom: bool | str = "auto"
+    # every scannable operating point — see the calibration note in
+    # operators/seen_filter.py), True = maintain + use the bloom
+    # prefilter (only for deployments whose seen side is not scannable
+    # at join time)
+    use_bloom: bool = False
     deny_extensions: list | None = None
     allowed_domains: list | None = None
     allow_regex: str | None = None
@@ -190,7 +177,7 @@ def bootstrap(
     )
     next_seq = (frontier0.agg(F.max("enqueue_seq")).collect()[0][0] or 0) + 1
     updates = {"frontier": frontier0, "seen": seen0, "robots": robots}
-    if _bloom_enabled(cfg):
+    if cfg.use_bloom:
         bloom = PartitionedBloom()
         updates["bloom"] = bloom.build(seen0)
     return fmt.commit(updates, meta={"round": 0, "next_seq": int(next_seq)})
@@ -285,18 +272,18 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # 6. dedup FIRST (reference order: the dupefilter is check-AND-insert
     # and runs before blacklist/expiry — scheduler.py:87-103 — so even
     # candidates later dropped by those filters enter the seen set):
-    # intra-round first-wins in pop order, then exact anti-join
+    # intra-round first-wins in pop order, then exact anti-join. The pop
+    # order is a total order (parent_seq is row-unique, anchor_offset
+    # unique within a page), so dedup and sequencing key on it directly
     pop_order = [
         F.col("parent_score").desc(),
         F.col("parent_seq").asc(),
         F.col("anchor_offset").asc(),
     ]
-    cands = with_dense_seq(
-        cands, pop_order, start=0, col_name="_cand_rank",
-        checkpoint_dir=cfg.checkpoint_dir,
+    cands = first_wins_dedup(
+        cands, F.struct(-F.col("parent_score"), "parent_seq", "anchor_offset")
     )
-    cands = first_wins_dedup(cands, "_cand_rank")
-    if _bloom_enabled(cfg) and fmt.read("bloom") is not None:
+    if cfg.use_bloom and fmt.read("bloom") is not None:
         bloom = PartitionedBloom()
         fingerprinted = bloom.prefiltered_unseen(cands, seen, fmt.read("bloom"))
     else:
@@ -311,16 +298,16 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
 
     # 8. dense enqueue_seq continuing the global sequence
     accepted = with_dense_seq(
-        accepted, [F.col("_cand_rank").asc()], start=next_seq, col_name="enqueue_seq",
+        accepted, pop_order, start=next_seq, col_name="enqueue_seq",
         checkpoint_dir=cfg.checkpoint_dir,
-    ).drop("_cand_rank", "parent_score", "parent_seq", "anchor_offset")
+    ).drop("parent_score", "parent_seq", "anchor_offset")
     accepted = fr.with_salt(accepted, cfg.salt_buckets)
     new_rows = accepted.select(*[c for c in frontier.columns])
     new_rows = _ckpt(new_rows, cfg.checkpoint_dir)
     n_enqueued = new_rows.count()
     # accepted fingerprints carry their enqueue_seq into the seen table
-    # (added_seq powers fingerprint-TTL expiry / the deletable cuckoo
-    # path); blacklist/expiry-dropped fingerprints keep NULL
+    # (added_seq orders fingerprint-TTL expiry); blacklist/expiry-dropped
+    # fingerprints keep NULL
     accepted_seen = new_rows.select(
         "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
     )
@@ -372,7 +359,7 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
         "fetch_log": fetch_log,
         "documents": documents,
     }
-    if _bloom_enabled(cfg) and fmt.read("bloom") is not None:
+    if cfg.use_bloom and fmt.read("bloom") is not None:
         updates["bloom"] = PartitionedBloom().merge(fmt.read("bloom"), new_seen)
     fmt.commit(
         updates,

@@ -418,9 +418,9 @@ def _summary_round_sql(r: int) -> str:
 ), batch{r} AS (
   SELECT * FROM pop{r} WHERE NOT (host % 5 = 0 AND private)
 ), cand{r} AS (
-  -- crank = the engine's _cand_rank pop order (parent score desc,
-  -- parent seq asc, anchor offset asc), computed where score/seq still
-  -- unambiguously mean the PARENT's
+  -- crank = the engine's pop order (parent score desc, parent seq asc,
+  -- anchor offset asc), the key its first-wins dedup and enqueue_seq
+  -- follow, computed where score/seq still unambiguously mean the PARENT's
   SELECT 'http://host-' || th || '.example' ||
          (CASE WHEN pvt THEN '/private/' ELSE '/p/' END) || c AS url,
          th AS host, c AS page, pvt AS private,

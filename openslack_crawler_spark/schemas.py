@@ -42,8 +42,11 @@ FRONTIER_SCHEMA = T.StructType(
 # populate it); NULL only for fingerprints whose candidate was dropped
 # by the blacklist/expiry/depth enqueue filters (they enter the seen
 # set per check-and-insert but never got a frontier row). added_seq
-# orders fingerprint-TTL expiry (queries_sessions.seen_ttl_expiry, the
-# deletable-cuckoo motivation).
+# orders fingerprint-TTL expiry (queries_sessions.seen_ttl_expiry). An
+# exact window over the seen table is enough for the TTL (exact beats
+# the bloom wherever seen is scannable, see operators/seen_filter.py);
+# should a probabilistic one ever be needed, the learned sliding-window
+# cuckoo filter (SIGMOD 2023) is the design to start from.
 SEEN_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),

@@ -57,34 +57,34 @@ def enqueue_batch(fmt: SnapshotParquetFormat, batch: DataFrame, epoch_id: int) -
     the standard enqueue operators."""
     meta = fmt.meta() or {"round": 0, "next_seq": 0}
     next_seq = int(meta.get("next_seq", 0))
-    cands = with_url_columns(batch, "url", canonicalize=True)
+    # arrival order: each request's position in the micro-batch, tagged
+    # BEFORE canonicalization — the file source's analogue of a Kafka
+    # (partition, offset). It breaks the tie between two requests with
+    # the same appid and canonical URL, so first-wins keeps the earlier
+    # arrival. The final enqueue_seq is assigned only AFTER dedup + seen
+    # anti-join (as round_job step 8 does): assigning it first and
+    # advancing next_seq by the kept count would let kept rows hold seqs
+    # >= the new next_seq, so a later micro-batch would reuse them and
+    # break the dense/monotone seq contract the pop tiebreak relies on.
+    cands = batch.withColumn("_arrival", F.monotonically_increasing_id())
+    cands = with_url_columns(cands, "url", canonicalize=True)
     cands = (
         cands.withColumn("depth", F.lit(0))
         .withColumn("retry_times", F.lit(0))
         .withColumn("dont_filter", F.lit(False))
         .withColumn("score", fr.score_expr())
     )
-    # deterministic intra-batch arrival order by (appid, url) — kafka
-    # offsets would supply this on a real topic. The final enqueue_seq is
-    # assigned only AFTER dedup + seen anti-join (as round_job step 8
-    # does): assigning it first and advancing next_seq by the kept count
-    # would let kept rows hold seqs >= the new next_seq, so a later
-    # micro-batch would reuse them and break the dense/monotone seq
-    # contract the pop tiebreak relies on.
-    from ..operators.sequence import with_dense_seq
-
-    cands = with_dense_seq(
-        cands, [F.col("appid").asc(), F.col("url").asc()], start=0,
-        col_name="_arrival_rank",
-    )
-    cands = first_wins_dedup(cands, "_arrival_rank")
+    cands = first_wins_dedup(cands, F.struct("appid", "url", "_arrival"))
     seen = fmt.read("seen")
     if seen is not None:
         cands = filter_unseen(cands, seen)
+    from ..operators.sequence import with_dense_seq
+
+    # (appid, url) is unique once deduped: one row per canonical URL
     cands = with_dense_seq(
-        cands, [F.col("_arrival_rank").asc()], start=next_seq,
+        cands, [F.col("appid").asc(), F.col("url").asc()], start=next_seq,
         col_name="enqueue_seq",
-    ).drop("_arrival_rank")
+    )
     cands = fr.with_salt(cands)
     frontier = fmt.read("frontier")
     new_rows = cands.select(

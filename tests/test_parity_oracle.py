@@ -101,3 +101,31 @@ def test_frontier_state_parity(spark_run, oracle_run):
         (r.url, r.depth, r.priority) for r in oracle_run.frontier
     }
     assert spark_frontier == oracle_frontier
+
+
+# Spark jobs of one steady round (round 2) of this crawl, as measured
+# with dedup and enqueue_seq both keyed on the pop order (local[4])
+STEADY_ROUND_MAX_JOBS = 36
+
+
+def test_steady_round_job_count(spark, tmp_path):
+    """Fixed per-job cost dominates a round at these sizes, so a round
+    that grows a Spark job (a recomputed count, an extra sequencing
+    pass) fails here before it shows in a benchmark."""
+    import uuid
+
+    seeds = synthetic.gen_seeds(spark, N_SEEDS, n_hosts=N_HOSTS)
+    robots = synthetic.gen_robots(spark, N_HOSTS)
+    cfg = rj.CrawlConfig(n_hosts=N_HOSTS, k_per_host=K, maxdepth=MAXDEPTH)
+    fmt = rj.run_crawl(spark, str(tmp_path), seeds, robots, cfg, rounds=1)
+    sc = spark.sparkContext
+    group = f"steady-round-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "parity crawl round 2")
+    try:
+        stats = rj.run_round(fmt, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats["round"] == 2 and stats["fetched"] > 0
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= STEADY_ROUND_MAX_JOBS, jobs

@@ -51,6 +51,25 @@ def test_first_wins_minby_matches_window_shape(spark):
     # column order preserved
     assert first_wins_dedup(c).columns == c.columns
 
+    # the order key as a Column: a struct with a descending component,
+    # as the round passes its pop order struct(-parent_score, parent_seq)
+    scored = (
+        c.withColumn("score", (F.col("enqueue_seq") % 2).cast("double"))
+        .withColumn("seq", -F.col("enqueue_seq"))
+    )
+    w = Window.partitionBy("url_hash").orderBy(F.col("score").desc(), F.col("seq").asc())
+    want = sorted(
+        map(
+            tuple,
+            scored.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+            .collect(),
+        )
+    )
+    got = sorted(map(tuple, first_wins_dedup(scored, F.struct(-F.col("score"), "seq")).collect()))
+    assert got == want
+
 
 def test_dont_filter_bypass(spark):
     # scheduler.py:73 / offline.py: dont_filter requests skip dedup
@@ -105,42 +124,3 @@ def test_bloom_incremental_merge(spark):
         merged,
     )
     assert probed.filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_bloom_gate_prefers_exact_when_seen_scannable(spark):
-    """Round-5 cost gate (VERDICT r4 'What's wrong' #3): two rounds of
-    bigseen data show the bloom prefilter loses whenever the exact
-    anti-join can scan the seen side, at every measured operating
-    point — so the gate keys on scannability, not a row-count
-    crossover."""
-    from openslack_crawler_spark.operators.seen_filter import (
-        PartitionedBloom,
-        choose_unseen_path,
-        filter_unseen,
-        unseen_auto,
-    )
-
-    assert choose_unseen_path(seen_scannable=True) == "exact"
-    assert choose_unseen_path(seen_scannable=False) == "bloom"
-
-    cands = spark.range(100).select(F.col("id").alias("url_hash"))
-    seen = spark.range(0, 100, 2).select(F.col("id").alias("url_hash"))
-    blocks = PartitionedBloom().build(seen)
-    expected = sorted(r.url_hash for r in filter_unseen(cands, seen).collect())
-    # both gate outcomes return the identical exact answer
-    for scannable in (True, False):
-        got = sorted(
-            r.url_hash
-            for r in unseen_auto(
-                cands, seen, blocks=blocks, seen_scannable=scannable
-            ).collect()
-        )
-        assert got == expected
-
-
-def test_round_job_auto_resolves_to_exact():
-    from openslack_crawler_spark.plans.round_job import CrawlConfig, _bloom_enabled
-
-    assert not _bloom_enabled(CrawlConfig())            # auto -> exact
-    assert _bloom_enabled(CrawlConfig(use_bloom=True))  # explicit opt-in wins
-    assert not _bloom_enabled(CrawlConfig(use_bloom=False))
