@@ -1,199 +1,170 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + BASELINE.json scaling evidence).
+"""Benchmark harness: prints the one-line bench JSON.
 
-Default mode: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the crawl
-scheduling-round throughput job at TWO parallelism levels (local[8] and
-local[32] — the sandbox stand-in for N and 4N executors), and prints
-ONE JSON line:
+Three phases, one Spark workload on the box at a time:
 
-  {"metric": "...", "value": <sched urls/sec at high parallelism>,
-   "unit": "sec", "queries": {...per-query sec...}, "sf": ...,
-   "scaling": {"cores_low": 8, "cores_high": 32, "urls_per_sec_low": ...,
-               "urls_per_sec_high": ..., "efficiency": ...}}
+1. Scaling. Steady-state crawl rounds through the real
+   `round_job.run_round` (dequeue, robots + politeness, fetch, link
+   extraction, first-wins dedup, seen anti-join, dense sequencing, one
+   snapshot commit) on a deterministic synthetic frontier of
+   $BENCH_URLS seeds over the cluster job's default hosts. n =
+   $SPARK_GRAFT_CPUS when set, else the CPUs this process may run on;
+   the levels are low = max(1, n // 4) and high = n.
+   Each level runs in its own subprocess, pinned to that many CPUs:
+   bootstrap and WARMUP_ROUNDS rounds untimed, then TIMED_ROUNDS timed
+   rounds. URLs are the fetch_log rows of the timed rounds; both levels
+   crawl the same frontier, so they must fetch the same count per round.
+   PASSES passes alternate which level runs first. `efficiency` is the
+   median of the per-pass paired ratios (sec_low / sec_high) / (high / low).
+2. Queries: BENCH_QUERIES at $SPARK_GRAFT_SF_DIR on local[n], one timed
+   count each.
+3. Bigseen: the seen >> candidates anti-join plans (run_bigseen_bench).
 
-Each parallelism level runs in a fresh subprocess (one JVM per master
-setting). Inner mode: `bench.py --sched-bench --cores N --urls M`.
+`value` is the seconds per steady round at the high level. The full
+record goes to bench_runs/bench_verbose_last.json. Inner mode, one
+level: `bench.py --round-bench --cores N --urls M`. A level subprocess
+gets SIGKILL when bench.py dies; its Spark JVM then exits on the EOF of
+its gateway pipe, and the JVM's Python workers go with it.
 """
 
 from __future__ import annotations
 
+import ctypes
 import json
 import os
+import signal
+import statistics
 import subprocess
 import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_URLS = int(os.environ.get("BENCH_URLS", "32000000"))
-N_HOSTS = 20000
-CORES_LOW, CORES_HIGH = 8, 32
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+# seeds, as perfbench's crawl_steady; the host shape is the cluster job's
+# default (jobs/crawl_job.py). At this size most of a round is fixed
+# per-job cost: on a 4-core VM a 500-seed crawl's rounds take 5.6 s against
+# 6.4 s here, so `efficiency` mostly measures how that cost scales.
+N_URLS = int(os.environ.get("BENCH_URLS", "20000"))
+CORES_LOW, CORES_HIGH = max(1, CPUS // 4), CPUS
+WARMUP_ROUNDS = 1
+TIMED_ROUNDS = 3
+PASSES = 3
+# seen rows per CPU: 200 M at 32 CPUs (the r1-r6 size), 25 M at 4
+BIGSEEN_SEEN, BIGSEEN_CANDS = 6_250_000 * CPUS, 1_000_000
 
 # headline per-query timings (a representative slice of queries();
 # the full registry is exercised by the correctness gate)
-BENCH_QUERIES = [
-    "seen_antijoin",
-    "dequeue_topk_per_host",
-    "politeness_slots",
-    "terms_agg_stats",
-    "merge_upsert",
-    "minhash_lsh_pairs",
-    "dedup_components",
-    "simhash",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "token_count",
-    "quality_gopher",
-    "bloom_prefilter_dedup",
-    "text_match_topk",
-    "text_bm25_topk",
-    "corpus_clean_pipeline",
-    "corpus_clean_fuzzy",
-    "media_frame_sample",
-    "chunk_dedup",
-    "repetition_ratio",
-    "ann_recall_report",
-    "link_rank",
-    "substring_dup_spans",
-    "winnow_shared_pairs",
-]
+BENCH_QUERIES = """
+    seen_antijoin dequeue_topk_per_host politeness_slots terms_agg_stats
+    merge_upsert minhash_lsh_pairs dedup_components simhash ann_lsh_topk
+    ann_ivf_topk token_count quality_gopher bloom_prefilter_dedup
+    text_match_topk text_bm25_topk corpus_clean_pipeline corpus_clean_fuzzy
+    media_frame_sample chunk_dedup repetition_ratio ann_recall_report
+    link_rank substring_dup_spans winnow_shared_pairs
+""".split()
 
 
-def sched_round_job(spark, n_urls: int, n_hosts: int) -> int:
-    """One full scheduling round, set-oriented: canonicalize+hash →
-    intra-batch first-wins dedup → seen anti-join → salted per-host
-    top-k dequeue → politeness slots. Returns rows scheduled."""
-    from pyspark.sql import functions as F
-
-    from openslack_crawler_spark import synthetic
-    from openslack_crawler_spark.functions.url import with_url_columns
-    from openslack_crawler_spark.operators import frontier as fr
-    from openslack_crawler_spark.operators.politeness import assign_fetch_slots
-    from openslack_crawler_spark.operators.seen_filter import (
-        filter_unseen,
-        first_wins_dedup,
-    )
-
-    seeds = synthetic.gen_seeds(
-        spark, n_urls, n_hosts=n_hosts, dup_frac=0.1, messy_frac=0.3
-    )
-    cands = with_url_columns(seeds, "url", canonicalize=True)
-    # column-prune to what this round's operators consume BEFORE the
-    # first shuffle: every byte here rides the dedup shuffle, the
-    # anti-join probe AND the snapshot commit. Catalyst prunes columns
-    # within a plan but cannot prune across the materialized snapshot
-    # below — do it manually (`host` is derivable from url; priority
-    # only feeds score). ~25% less row payload measured at 32M rows.
-    cands = cands.select(
-        "url",
-        "url_hash",
-        "host_hash",
-        "appid",
-        "crawlid",
-        "enqueue_seq",
-        F.col("priority").cast("double").alias("score"),
-    ).withColumn("dont_filter", F.lit(False))
-    cands = first_wins_dedup(cands, "enqueue_seq")
-    # seen set: ~25% of the URL space already crawled
-    seen = (
-        synthetic.gen_seeds(spark, n_urls // 4, n_hosts=n_hosts, dup_frac=0.0)
-        .select("url")
-        .select(F.xxhash64(F.col("url")).alias("url_hash"))
-    )
-    fresh = filter_unseen(cands, seen)
-    fresh = fr.with_salt(fresh, 16)
-    # materialize once as a parquet snapshot — exactly what a round
-    # commit does (table_format), and unlike localCheckpoint it stays
-    # off-heap/compressed instead of exploding the JVM heap at high
-    # task concurrency. The snapshot lives in tmpfs when available: the
-    # scaling study compares 8 vs 32 cores of the SAME pipeline, and
-    # shared-disk contention from hypervisor neighbors is exactly the
-    # noise the study must exclude (a real cluster's commit bandwidth
-    # scales with executors; this box's one virtual disk does not).
+def run_round_bench(cores: int, n_urls: int) -> dict:
+    """One level: a fresh crawl of n_urls seeds on local[cores],
+    bootstrap + WARMUP_ROUNDS untimed, then TIMED_ROUNDS timed rounds."""
+    import shutil
     import tempfile
 
-    snap_root = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    snap = tempfile.mkdtemp(prefix="bench_snap_", dir=snap_root)
-    fresh.write.mode("overwrite").parquet(snap)
-    fresh = spark.read.parquet(snap)
-    try:
-        batch = fr.dequeue_top_k_per_host(fresh, 8, salted=True)
-        batch = assign_fetch_slots(batch, robots=None)
-        return batch.count()
-    finally:
-        import shutil
-
-        shutil.rmtree(snap, ignore_errors=True)
-
-
-def run_sched_bench(cores: int, n_urls: int) -> dict:
-    from openslack_crawler_spark.session import get_spark
-
-    # BENCH_CODEC=zstd trades CPU (scales with cores) for shuffle +
-    # snapshot bytes (memory bandwidth, which does NOT scale with
-    # local threads) — A/B knob for the scaling study
-    codec = os.environ.get("BENCH_CODEC")
-    extra = (
-        {
-            "spark.io.compression.codec": codec,
-            "spark.sql.parquet.compression.codec": codec,
-        }
-        if codec
-        else None
-    )
-    spark = get_spark(
-        app_name=f"sched-bench-{cores}", cores=cores, extra_conf=extra
-    )
-    # Warm the JVM + the python-worker pool at FULL parallelism before
-    # timing: local-mode workers spawn lazily over the first couple of
-    # stages, which would charge one-off fork/import cost to the
-    # measured job. A real cluster's executors keep long-lived warm
-    # workers, so steady-state is the honest number.
     from pyspark.sql import functions as F
 
-    from openslack_crawler_spark.functions.url import canonicalize_udf
+    from jobs.crawl_job import K_PER_HOST, N_HOSTS
+    from openslack_crawler_spark import synthetic
+    from openslack_crawler_spark.plans import round_job as rj
+    from openslack_crawler_spark.session import get_spark
 
-    warm = spark.range(200000).repartition(cores).select(
-        canonicalize_udf(
-            F.concat(F.lit("HTTP://W.Example/p/"), F.col("id").cast("string"))
-        ).alias("u")
-    )
-    for _ in range(3):
-        warm.agg(F.max(F.length("u"))).collect()
-    # one warmup round of the same plan shape (JIT + codegen + worker
-    # pool), then two timed rounds, best-of — a crawl runs thousands of
-    # rounds, so steady-state throughput is the meaningful number and
-    # best-of-2 suppresses one-off stragglers (GC, page cache)
-    sched_round_job(spark, max(n_urls // 8, 100000), N_HOSTS)
-    times = []
-    scheduled = 0
-    for _ in range(3):
-        t0 = time.perf_counter()
-        scheduled = sched_round_job(spark, n_urls, N_HOSTS)
-        times.append(time.perf_counter() - t0)
-    dt = min(times)
+    spark = get_spark(app_name=f"round-bench-{cores}", cores=cores)
+    seeds = synthetic.gen_seeds(spark, n_urls, n_hosts=N_HOSTS)
+    robots = synthetic.gen_robots(spark, N_HOSTS)
+    cfg = rj.CrawlConfig(n_hosts=N_HOSTS, k_per_host=K_PER_HOST)
+    # spark-* prefix: sweep_stale_scratch reclaims it if a kill leaks it
+    root = tempfile.mkdtemp(prefix="spark-round-bench-")
+    try:
+        fmt = rj.run_crawl(spark, root, seeds, robots, cfg, rounds=WARMUP_ROUNDS)
+        secs = []
+        for _ in range(TIMED_ROUNDS):
+            t0 = time.perf_counter()
+            rj.run_round(fmt, cfg)
+            secs.append(time.perf_counter() - t0)
+        timed = range(WARMUP_ROUNDS + 1, WARMUP_ROUNDS + TIMED_ROUNDS + 1)
+        log = fmt.read("fetch_log").filter(F.col("round_id") > WARMUP_ROUNDS)
+        counts = dict(log.groupBy("round_id").count().collect())
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
     return {
         "cores": cores,
-        "urls_in": n_urls,
-        "scheduled": scheduled,
-        "sec": dt,
-        "all_secs": [round(t, 3) for t in times],
-        "urls_per_sec": n_urls / dt,
+        "seeds": n_urls,
+        "round_secs": [round(s, 3) for s in secs],
+        "fetched": [counts.get(r, 0) for r in timed],
     }
 
 
-def run_sched_loop(cores: int, n_urls: int) -> None:
-    """Neighbor-load mode: run the sched round forever (killed by the
-    parent). Used by the equal-conditions scaling measurement — the
-    'other 3 N-core executor groups are busy with identical work'
-    stand-in that gives the 8-core timed job the same clock/cache/
-    bandwidth conditions the 32-core job creates for itself."""
-    from openslack_crawler_spark.session import get_spark
+PR_SET_PDEATHSIG = 1
 
-    spark = get_spark(app_name=f"sched-loop-{cores}", cores=cores)
-    while True:
-        sched_round_job(spark, n_urls, N_HOSTS)
+
+def run_level(cores: int, cpus: list[int]) -> dict:
+    """run_round_bench in a subprocess pinned to cpus, killed with us."""
+    parent = os.getpid()
+    prctl = ctypes.CDLL(None, use_errno=True).prctl  # looked up before the fork
+    prctl.argtypes, prctl.restype = [ctypes.c_int, ctypes.c_ulong], ctypes.c_int
+
+    def preexec():
+        prctl(PR_SET_PDEATHSIG, signal.SIGKILL)
+        if os.getppid() != parent:  # we died before the line above ran
+            os._exit(1)
+        os.sched_setaffinity(0, cpus)
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    proc = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--round-bench",
+         "--cores", str(cores), "--urls", str(N_URLS)],
+        capture_output=True, text=True, timeout=1800, cwd=here,
+        preexec_fn=preexec,
+    )
+    for line in proc.stdout.splitlines():
+        if line.startswith("ROUNDJSON:"):
+            return json.loads(line[len("ROUNDJSON:"):])
+    sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-2000:])
+    raise RuntimeError(f"round bench at {cores} cores produced no result")
+
+
+def run_scaling() -> dict:
+    cpus = sorted(os.sched_getaffinity(0))
+    runs: dict[int, list] = {CORES_LOW: [], CORES_HIGH: []}
+    pass_effs = []
+    for p in range(PASSES):
+        order = (CORES_LOW, CORES_HIGH) if p % 2 == 0 else (CORES_HIGH, CORES_LOW)
+        for cores in order:
+            runs[cores].append(run_level(cores, cpus[:cores]))
+        lo, hi = (sum(runs[c][-1]["round_secs"]) for c in (CORES_LOW, CORES_HIGH))
+        pass_effs.append(round(lo / hi / (CORES_HIGH / CORES_LOW), 3))
+    fetched = {tuple(r["fetched"]) for rs in runs.values() for r in rs}
+    if len(fetched) != 1:
+        raise RuntimeError(f"levels fetched different URL counts: {fetched}")
+    (per_round,) = fetched
+    if not all(per_round):
+        raise RuntimeError(f"a timed round fetched nothing: {per_round}")
+    urls = sum(per_round)
+    sec = {
+        c: statistics.median(sum(r["round_secs"]) / TIMED_ROUNDS for r in rs)
+        for c, rs in runs.items()
+    }
+    return {
+        "cores_low": CORES_LOW,
+        "cores_high": CORES_HIGH,
+        "sec_low": round(sec[CORES_LOW], 3),
+        "sec_high": round(sec[CORES_HIGH], 3),
+        "urls_per_sec_low": round(urls / TIMED_ROUNDS / sec[CORES_LOW]),
+        "urls_per_sec_high": round(urls / TIMED_ROUNDS / sec[CORES_HIGH]),
+        "efficiency": statistics.median(pass_effs),
+        "pass_efficiencies": pass_effs,
+        "urls": urls,
+        "runs": {str(c): rs for c, rs in runs.items()},
+    }
 
 
 def run_bigseen_bench(n_seen: int, n_cands: int) -> dict:
@@ -241,8 +212,9 @@ def run_bigseen_bench(n_seen: int, n_cands: int) -> dict:
     ).saveAsTable("bigseen")
     seen_b = spark.table("bigseen")
 
-    # ~10 bits/key for ~1% fp: 200M keys / 64 blocks → 2^25 bits (4 MiB)
-    # per block, 256 MiB total — the bitmap volume the probe transfers
+    # ~10 bits/key for ~1% fp: n_seen * 10 / 64 bits per block, rounded
+    # up to a power of two — 64 blocks are the bitmap volume the probe
+    # transfers
     bits = 1 << max(20, (n_seen * 10 // 64).bit_length())
     bloom = PartitionedBloom(num_blocks=64, bits=bits)
     blocks_path = f"{wh}/bigseen_bloom"
@@ -299,199 +271,7 @@ def run_bigseen_bench(n_seen: int, n_cands: int) -> dict:
     return out
 
 
-def _burn(n):
-    x = 0
-    for i in range(n):
-        x += i * i
-    return x
-
-
-def cpu_sentinel() -> float:
-    """Raw 32-proc ALU burn (sec) — a host-noise sentinel recorded with
-    every bench so cross-round comparisons can spot a noisy hypervisor
-    neighbor (this box's shared-host variance measured up to 3x on
-    memory-bandwidth-bound work)."""
-    import multiprocessing as mp
-
-    with mp.Pool(CPUS) as p:
-        t0 = time.perf_counter()
-        p.map(_burn, [20_000_000] * CPUS)
-        return round(time.perf_counter() - t0, 3)
-
-
-def quick_sentinel() -> float:
-    """A ~1s 32-proc ALU burn used to GATE timed passes: when the
-    shared host is in a noisy window, wait it out instead of recording
-    a poisoned measurement."""
-    import multiprocessing as mp
-
-    with mp.Pool(CPUS) as p:
-        t0 = time.perf_counter()
-        p.map(_burn, [4_000_000] * CPUS)
-        return round(time.perf_counter() - t0, 3)
-
-
-def _memcpy_burn(mb: int) -> float:
-    import numpy as np
-
-    a = np.ones(mb * 131072, dtype=np.float64)  # mb MiB
-    t0 = time.perf_counter()
-    for _ in range(4):
-        b = a.copy()
-    del b
-    return time.perf_counter() - t0
-
-
-def membw_sentinel() -> float:
-    """Memory-BANDWIDTH sentinel (sec): 8 procs each streaming ~4×256MiB
-    copies. The round-2/3 data shows the hypervisor noise that poisons
-    Spark timings is bandwidth-side, invisible to a pure-ALU burn — this
-    sentinel sees it, so pass gating keys on BOTH."""
-    import multiprocessing as mp
-
-    with mp.Pool(8) as p:
-        t0 = time.perf_counter()
-        p.map(_memcpy_burn, [256] * 8)
-        return round(time.perf_counter() - t0, 3)
-
-
-GATE_TOTAL_BUDGET_SEC = 900.0  # cumulative gating cap across the whole run
-
-
-def quick_hw_ceiling() -> float:
-    """~5s probe of the box's CURRENT parallel-scaling ceiling: one
-    pinned pure-ALU burn at 8 and at 32 procs (single rep each).
-    DIAGNOSTIC ONLY as of round 5 — recorded alongside rejected
-    windows so the turbo-differential story stays observable, but it
-    no longer ADMITS windows to the timed passes (the round-4 practice
-    of accepting neighbor-loaded windows because their flattened
-    clocks make ≥0.8 'reachable' selects for exactly the interference
-    the gate exists to exclude — advisor r4, high). Returns -1.0 on
-    any probe failure instead of aborting the bench."""
-    import subprocess as sp
-    import textwrap
-
-    code = textwrap.dedent(
-        """
-        import multiprocessing as mp, time, sys
-        def burn(n):
-            x = 0
-            for i in range(n): x += i*i
-            return x
-        procs = int(sys.argv[1])
-        with mp.Pool(procs) as p:
-            t0 = time.perf_counter()
-            p.map(burn, [20_000_000]*procs)
-            print(time.perf_counter()-t0)
-        """
-    )
-    import shutil as _sh
-
-    secs = {}
-    try:
-        for procs, cpus in ((CORES_LOW, f"0-{CORES_LOW - 1}"), (CORES_HIGH, f"0-{CORES_HIGH - 1}")):
-            cmd = [sys.executable, "-c", code, str(procs)]
-            if _sh.which("taskset"):
-                cmd = ["taskset", "-c", cpus] + cmd
-            secs[procs] = float(sp.run(cmd, capture_output=True, text=True).stdout.strip())
-        return round(
-            (CORES_HIGH / secs[CORES_HIGH]) / (CORES_LOW / secs[CORES_LOW])
-            / (CORES_HIGH / CORES_LOW),
-            3,
-        )
-    except (ValueError, OSError):
-        return -1.0
-
-
-def wait_for_quiet_host(
-    gate: dict, tolerance: float = 1.15, max_wait_sec: float = 180.0
-) -> tuple[float, float, float]:
-    """Poll the sentinels until the window is GOOD for a scaling pass,
-    or the wait budget runs out — never blocks the bench forever.
-
-    Round-5 policy (advisor r4, high): a good window is the QUIET-HOST
-    condition only — memory bandwidth AND ALU within `tolerance` of the
-    quietest seen. The round-4 alternative acceptance path (neighbor-
-    loaded windows whose flattened turbo clocks made ≥0.8 'physically
-    reachable') is gone: it selected for interference that slows the
-    pinned 8-core baseline, inflating the 32v8 ratio — window-selection
-    bias, not measurement. The turbo confound is instead REPORTED,
-    separately and explicitly, via hw_scaling_ceiling() /
-    efficiency_vs_hw_ceiling / the equal-conditions run.
-
-    quick_hw_ceiling() is probed only for REJECTED noisy-ALU windows
-    (diagnostic: was the noise the turbo-flattening kind?) — never to
-    admit one.
-
-    `gate` carries running minima {"alu","bw"} plus cumulative wait
-    seconds ("spent") under the GLOBAL cap (driver harnesses time the
-    bench). Returns (alu_s, bw_s, hw_ceiling_diag)."""
-    budget_left = GATE_TOTAL_BUDGET_SEC - gate.get("spent", 0.0)
-    deadline = time.monotonic() + min(max_wait_sec, max(0.0, budget_left))
-    t0 = time.monotonic()
-    hw = -1.0
-    try:
-        while True:
-            alu, bw = quick_sentinel(), membw_sentinel()
-            gate["alu"] = min(gate.get("alu", alu), alu)
-            gate["bw"] = min(gate.get("bw", bw), bw)
-            bw_quiet = bw <= gate["bw"] * tolerance
-            alu_quiet = alu <= gate["alu"] * tolerance
-            good = bw_quiet and alu_quiet
-            hw = quick_hw_ceiling() if (bw_quiet and not alu_quiet) else -1.0
-            if good or time.monotonic() >= deadline:
-                return alu, bw, hw
-            time.sleep(15)
-    finally:
-        gate["spent"] = gate.get("spent", 0.0) + (time.monotonic() - t0)
-
-
-def hw_scaling_ceiling() -> dict:
-    """The box's OWN parallel-scaling ceiling, measured: a pinned
-    pure-ALU burn at 8 and 32 procs. A partially-loaded turbo CPU
-    clocks higher than a fully-loaded one, so per-core work is faster
-    at 8-wide than at 32-wide — a hardware property of single-box
-    scaling studies that equal-clock N→4N NODE clusters do not have.
-    Reported so the pipeline's efficiency can be read against what the
-    hardware itself can deliver (pipeline_eff / hw_eff transfers to
-    the cluster setting)."""
-    import subprocess as sp
-    import textwrap
-
-    code = textwrap.dedent(
-        """
-        import multiprocessing as mp, time, sys
-        def burn(n):
-            x = 0
-            for i in range(n): x += i*i
-            return x
-        procs = int(sys.argv[1])
-        with mp.Pool(procs) as p:
-            best = min(
-                (lambda t0: (p.map(burn, [30_000_000]*procs), time.perf_counter()-t0)[1])(time.perf_counter())
-                for _ in range(3)
-            )
-        print(best)
-        """
-    )
-    secs = {}
-    for procs, cpus in ((CORES_LOW, f"0-{CORES_LOW - 1}"), (CORES_HIGH, f"0-{CORES_HIGH - 1}")):
-        cmd = [sys.executable, "-c", code, str(procs)]
-        import shutil as _sh2
-
-        if _sh2.which("taskset"):
-            cmd = ["taskset", "-c", cpus] + cmd
-        secs[procs] = float(sp.run(cmd, capture_output=True, text=True).stdout.strip())
-    tput_low = CORES_LOW / secs[CORES_LOW]
-    tput_high = CORES_HIGH / secs[CORES_HIGH]
-    return {
-        "burn_sec_low": round(secs[CORES_LOW], 3),
-        "burn_sec_high": round(secs[CORES_HIGH], 3),
-        "hw_efficiency": round(tput_high / tput_low / (CORES_HIGH / CORES_LOW), 3),
-    }
-
-
-def sweep_stale_scratch(min_free_gb: float = 40.0, min_age_s: float = 900.0) -> None:
+def sweep_stale_scratch(min_free_gb: float = 10.0, min_age_s: float = 900.0) -> None:
     """Reclaim crash-leaked Spark scratch before the bench starts.
 
     A killed Spark JVM leaves its /tmp/blockmgr-* and /tmp/spark-*
@@ -513,28 +293,18 @@ def sweep_stale_scratch(min_free_gb: float = 40.0, min_age_s: float = 900.0) -> 
         return
     if st.f_bavail * st.f_frsize / 2**30 >= min_free_gb:
         return
-
-    def _in_use(path: str) -> bool:
-        prefix = path.rstrip("/") + "/"
-        for fd_dir in glob.glob("/proc/[0-9]*/fd"):
-            try:
-                fds = os.listdir(fd_dir)
-            except OSError:
-                continue
-            for fd in fds:
-                try:
-                    tgt = os.readlink(os.path.join(fd_dir, fd))
-                except OSError:
-                    continue
-                if tgt.startswith(prefix):
-                    return True
-        return False
-
-    now = time.time()
-    freed = 0
+    open_files = set()
+    for fd in glob.glob("/proc/[0-9]*/fd/*"):
+        try:
+            open_files.add(os.readlink(fd))
+        except OSError:
+            pass
+    now, freed = time.time(), 0
     for d in glob.glob("/tmp/blockmgr-*") + glob.glob("/tmp/spark-*"):
         try:
-            if now - os.path.getmtime(d) < min_age_s or _in_use(d):
+            if now - os.path.getmtime(d) < min_age_s or any(
+                f.startswith(d + "/") for f in open_files
+            ):
                 continue
         except OSError:
             continue
@@ -562,283 +332,63 @@ def run_query_bench() -> dict:
     for t in ("customer", "orders", "lineitem", "events", "documents", "embeddings"):
         spark.read.parquet(f"{SF_DIR}/{t}.parquet").count()
     for name in BENCH_QUERIES:
-        fn = qs[name]
         t0 = time.perf_counter()
-        df = fn(spark, SF_DIR)
-        n = df.count()
+        qs[name](spark, SF_DIR).count()
         out[name] = round(time.perf_counter() - t0, 3)
-        _ = n
     return out
 
 
 def main():
+    if "--round-bench" in sys.argv:
+        cores = int(sys.argv[sys.argv.index("--cores") + 1])
+        urls = int(sys.argv[sys.argv.index("--urls") + 1])
+        print("ROUNDJSON:" + json.dumps(run_round_bench(cores, urls)))
+        return
+
     sweep_stale_scratch()
-    if "--sched-bench" in sys.argv:
-        cores = int(sys.argv[sys.argv.index("--cores") + 1])
-        urls = int(sys.argv[sys.argv.index("--urls") + 1])
-        print("SCHEDJSON:" + json.dumps(run_sched_bench(cores, urls)))
-        return
-    if "--sched-loop" in sys.argv:
-        cores = int(sys.argv[sys.argv.index("--cores") + 1])
-        urls = int(sys.argv[sys.argv.index("--urls") + 1])
-        run_sched_loop(cores, urls)
-        return
-    if "--bigseen-bench" in sys.argv:
-        n_seen = int(os.environ.get("BIGSEEN_SEEN", "200000000"))
-        n_cands = int(os.environ.get("BIGSEEN_CANDS", "1000000"))
-        print("BIGSEENJSON:" + json.dumps(run_bigseen_bench(n_seen, n_cands)))
-        return
+    phase_secs = {}
 
-    # BENCH_SCALING_ONLY=1 skips the query + bigseen phases — for
-    # iterating on the scaling study in a quiet host window without
-    # paying the ~25 min of unrelated phases
-    scaling_only = os.environ.get("BENCH_SCALING_ONLY") == "1"
-    sentinel_before = cpu_sentinel()
-    queries = {} if scaling_only else run_query_bench()
-    # stop the parent JVM before the subprocess benches: an idle 20g
-    # session + its page-cache footprint measurably pollutes the
-    # pinned scaling runs (measured: 42s vs 22.5s at local[32])
-    if not scaling_only:
-        from openslack_crawler_spark.session import get_spark
+    def phase(name, fn, *args):
+        t0 = time.perf_counter()
+        out = fn(*args)
+        phase_secs[name] = round(time.perf_counter() - t0, 1)
+        return out
 
-        get_spark(cores=CPUS).stop()
-
-    scaling = {}
-    results = {}
-    import shutil as _shutil
-
-    def one_sched_run(cores: int) -> dict:
-        cmd = [sys.executable, os.path.abspath(__file__), "--sched-bench",
-               "--cores", str(cores), "--urls", str(N_URLS)]
-        if _shutil.which("taskset"):
-            # pin the whole process tree (JVM + python workers) to a
-            # `cores`-wide CPU budget: an unpinned local[8] on a 32-core
-            # box borrows the idle cores and understates scaling
-            cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-        proc = subprocess.run(
-            cmd, capture_output=True, text=True, timeout=1800,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-        for line in proc.stdout.splitlines():
-            if line.startswith("SCHEDJSON:"):
-                return json.loads(line[len("SCHEDJSON:"):])
-        sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-2000:])
-        raise RuntimeError(f"sched bench at {cores} cores produced no result")
-
-    # THREE+ passes, each pass = BOTH levels timed back-to-back in ONE
-    # quiet-host-gated window (the same-conditions pairing a real
-    # N-vs-4N cluster study gives every node). This box is a shared
-    # host whose memory-bandwidth noise comes in multi-minute bursts
-    # (measured 2-3x swings on identical back-to-back runs); gating
-    # waits out noisy windows (bounded), alternating level order
-    # decorrelates drift. The CONTRACT number is the MEDIAN of the
-    # per-pass paired ratios (advisor r4: max-of-pairs cherry-picks
-    # the pass whose 8-core baseline ran slowest — for a RATIO, noise
-    # is not one-sided, so best-of is biased upward). If the median
-    # lands under 0.8 after 3 passes, up to 3 extra passes run — more
-    # samples, never a different metric.
-    gate: dict = {}
-    # Seed the gate's noise floor BEFORE the first pass: the quiet
-    # thresholds are relative to the quietest sample seen, so an
-    # unseeded gate admits whatever the first window looks like
-    # (r5 run 1: pass 1 ran at bw 11.8s vs the ~2.2s floor later
-    # samples established). ~30s of probes up front fixes it.
-    for _ in range(3):
-        gate["alu"] = min(gate.get("alu", 1e9), quick_sentinel())
-        gate["bw"] = min(gate.get("bw", 1e9), membw_sentinel())
-    pass_sentinels = []
-
-    pass_pairs = []  # per-pass (sec_low, sec_high) measured in ONE window
-
-    def run_pass(order):
-        pair = {}
-        for cores in order:
-            alu, bw, hw = wait_for_quiet_host(gate)
-            pass_sentinels.append({"cores": cores, "alu": alu, "bw": bw, "hw": hw})
-            r = one_sched_run(cores)
-            prev = results.get(cores)
-            if prev is None or r["sec"] < prev["sec"]:
-                results[cores] = r
-            results.setdefault(f"passes_{cores}", []).append(round(r["sec"], 3))
-            pair[cores] = r["sec"]
-        pass_pairs.append(
-            round((pair[CORES_LOW] / pair[CORES_HIGH]) / (CORES_HIGH / CORES_LOW), 3)
-        )
-
-    import statistics
-
-    def current_eff() -> float:
-        # the contract number while sampling: median of paired ratios
-        return statistics.median(pass_pairs) if pass_pairs else 0.0
-
-    # alternate the level order across passes so slow host drift
-    # decorrelates from parallelism level
-    orders = [(CORES_LOW, CORES_HIGH), (CORES_HIGH, CORES_LOW)]
-    for p in range(3):
-        run_pass(orders[p % 2])
-    extra = 0
-    while current_eff() < 0.8 and extra < 3:
-        run_pass(orders[(3 + extra) % 2])
-        extra += 1
-
-    low, high = results[CORES_LOW], results[CORES_HIGH]
-    med_low = statistics.median(results[f"passes_{CORES_LOW}"])
-    med_high = statistics.median(results[f"passes_{CORES_HIGH}"])
-    scaling = {
-        "cores_low": CORES_LOW,
-        "cores_high": CORES_HIGH,
-        "urls_per_sec_low": round(low["urls_per_sec"]),
-        "urls_per_sec_high": round(high["urls_per_sec"]),
-        "sec_low": round(low["sec"], 3),
-        "sec_high": round(high["sec"], 3),
-        "sec_low_median": round(med_low, 3),
-        "sec_high_median": round(med_high, 3),
-        # THE raw contract number: median of the per-pass paired ratios,
-        # every pass measured under the quiet-host gate (both levels
-        # back-to-back in one window). No max-of-pairs, no cross-window
-        # best-of ratio, no normalization — those appear below, labeled.
-        "efficiency": round(statistics.median(pass_pairs), 3)
-        if pass_pairs
-        else None,
-        "pass_efficiencies": pass_pairs,
-        "efficiency_paired_best": max(pass_pairs) if pass_pairs else None,
-        # supplemental: ratio of cross-window bests (the r1-r4 headline
-        # definition — kept for round-over-round comparability only)
-        "efficiency_best_of_levels": round(
-            (low["sec"] / high["sec"]) / (CORES_HIGH / CORES_LOW), 3
-        ),
-        "urls": N_URLS,
-        "pass_secs_low": results[f"passes_{CORES_LOW}"],
-        "pass_secs_high": results[f"passes_{CORES_HIGH}"],
-        "pass_sentinels": pass_sentinels,
-        "cpu_sentinel_before": sentinel_before,
-        "cpu_sentinel_after": cpu_sentinel(),
-    }
-    # turbo-confound-adjusted figures — reported SEPARATELY from raw
-    # (the pinned 8-core baseline turbo-boosts ~1.2x on a quiet host;
-    # equal-clock N-vs-4N node clusters don't have that, so raw under-
-    # states the transferable number; see BENCH.md)
-    hw = hw_scaling_ceiling()
-    scaling["hw_ceiling"] = hw
-    scaling["efficiency_vs_hw_ceiling"] = round(
-        (scaling["efficiency"] or 0.0) / hw["hw_efficiency"], 3
-    )
-
-    # Equal-conditions supporting measurement (only when raw misses the
-    # 0.8 gate — raw stays the primary number): the idle-box 8-core
-    # baseline enjoys turbo clocks, the whole L3 and all the memory
-    # bandwidth — an advantage no real N-node-vs-4N-node comparison
-    # gives the small cluster, where every node runs the same job under
-    # the same local conditions. Re-run the low level while the other
-    # three 8-core groups run the IDENTICAL job in a loop, so every
-    # core group sees the conditions the 32-core run creates for
-    # itself. Measured on this box: idle 8-core overstates its own
-    # throughput by ~1.5x vs loaded-neighbors 8-core.
-    if (scaling["efficiency"] or 0.0) < 0.8 and _shutil.which("taskset"):
-        import signal
-
-        neighbors = []
-        try:
-            for i in range(1, CORES_HIGH // CORES_LOW):
-                lo, hi = i * CORES_LOW, (i + 1) * CORES_LOW - 1
-                ncmd = [
-                    "taskset", "-c", f"{lo}-{hi}", sys.executable,
-                    os.path.abspath(__file__), "--sched-loop",
-                    "--cores", str(CORES_LOW), "--urls", str(N_URLS),
-                ]
-                neighbors.append(
-                    subprocess.Popen(
-                        ncmd, stdout=subprocess.DEVNULL,
-                        stderr=subprocess.DEVNULL, start_new_session=True,
-                        cwd=os.path.dirname(os.path.abspath(__file__)),
-                    )
-                )
-            time.sleep(75)  # neighbor JVMs warm into steady-state rounds
-            loaded = one_sched_run(CORES_LOW)
-            scaling["sec_low_equal_conditions"] = round(loaded["sec"], 3)
-            scaling["efficiency_equal_conditions"] = round(
-                (loaded["sec"] / high["sec"]) / (CORES_HIGH / CORES_LOW), 3
-            )
-        finally:
-            for p in neighbors:
-                try:
-                    os.killpg(p.pid, signal.SIGKILL)
-                except Exception:
-                    pass
-
-    # seen ≫ candidates regime — runs LAST (own subprocess/JVM): its
-    # 200M-row shuffle + page-cache footprint must not precede the
-    # pinned scaling runs (one Spark workload at a time when timing)
-    bigseen = {}
-    if not scaling_only:
-        cmd = [sys.executable, os.path.abspath(__file__), "--bigseen-bench"]
-        proc = subprocess.run(
-            cmd, capture_output=True, text=True, timeout=1800,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-        for line in proc.stdout.splitlines():
-            if line.startswith("BIGSEENJSON:"):
-                bigseen = json.loads(line[len("BIGSEENJSON:"):])
-                break
-        else:
-            sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-2000:])
-            raise RuntimeError("bigseen bench produced no result")
+    # scaling first, while this process has no JVM of its own
+    scaling = phase("scaling", run_scaling)
+    queries = phase("queries", run_query_bench)
+    bigseen = phase("bigseen", run_bigseen_bench, BIGSEEN_SEEN, BIGSEEN_CANDS)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    verbose = {
-        "metric": "URLs scheduled+deduped/sec (one full scheduling round: canonicalize, hash, dedup, seen anti-join, salted top-k dequeue, politeness)",
+    line = {
+        "metric": "seconds per steady-state crawl round (round_job.run_round: "
+        "dequeue, robots + politeness, fetch, link extraction, dedup, seen "
+        "anti-join, dense sequencing, snapshot commit)",
         "value": scaling["sec_high"],
         "unit": "sec",
         "queries": queries,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "urls_per_sec": scaling["urls_per_sec_high"],
-        "scaling": scaling,
-        "bigseen": bigseen,
+        "scaling": {k: scaling[k] for k in (
+            "cores_low", "cores_high", "sec_low", "sec_high", "urls_per_sec_low",
+            "urls_per_sec_high", "efficiency", "pass_efficiencies", "urls")},
+        "bigseen": {
+            **{k: bigseen[k]["sec"] for k in ("exact_shuffle", "exact_spj", "bloom_spj")},
+            "chosen_path": bigseen["chosen_path"],
+            "chosen_sec": bigseen["chosen_sec"],
+        },
+        "verbose_file": "bench_runs/bench_verbose_last.json",
     }
-    # Full record (per-pass timings, sentinels, hw ceiling) goes to a
-    # file; stdout carries ONE compact JSON line so the driver's bounded
-    # output capture can always parse it (BENCH_r03.json had parsed:null
-    # because the verbose line overflowed the capture window).
+    # the full record (per-run round times, bigseen rows) goes to a file;
+    # stdout carries ONE compact line so a bounded capture can parse it
     vdir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_runs")
     os.makedirs(vdir, exist_ok=True)
     with open(os.path.join(vdir, "bench_verbose_last.json"), "w") as f:
-        json.dump(verbose, f, indent=1)
-    compact_scaling = {
-        k: scaling[k]
-        for k in (
-            "cores_low", "cores_high", "sec_low", "sec_high",
-            "urls_per_sec_low", "urls_per_sec_high", "efficiency",
-            "efficiency_paired_best", "efficiency_best_of_levels",
-            "pass_efficiencies", "efficiency_vs_hw_ceiling", "urls",
+        json.dump(
+            {**line, "scaling": scaling, "bigseen": bigseen, "phase_secs": phase_secs},
+            f, indent=1,
         )
-        if k in scaling
-    }
-    if "efficiency_equal_conditions" in scaling:
-        compact_scaling["efficiency_equal_conditions"] = scaling[
-            "efficiency_equal_conditions"
-        ]
-    compact_scaling["hw_efficiency"] = hw["hw_efficiency"]
-    print(
-        json.dumps(
-            {
-                "metric": verbose["metric"],
-                "value": scaling["sec_high"],
-                "unit": "sec",
-                "queries": queries,
-                "sf": verbose["sf"],
-                "urls_per_sec": scaling["urls_per_sec_high"],
-                "scaling": compact_scaling,
-                "bigseen": {
-                    **{k: v["sec"] for k, v in bigseen.items()
-                       if isinstance(v, dict) and "sec" in v},
-                    **{k: bigseen[k] for k in ("chosen_path", "chosen_sec")
-                       if k in bigseen},
-                },
-                "verbose_file": "bench_runs/bench_verbose_last.json",
-            },
-            separators=(",", ":"),
-        )
-    )
+    print(json.dumps(line, separators=(",", ":")))
 
 
 if __name__ == "__main__":

@@ -30,6 +30,10 @@ _repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _repo_root not in sys.path:
     sys.path.insert(0, _repo_root)
 
+# default crawl shape (also the workload bench.py times)
+N_HOSTS = 20000
+K_PER_HOST = 8
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -39,8 +43,8 @@ def main() -> None:
                     help="generate N synthetic seeds instead of --seeds")
     ap.add_argument("--rounds", type=int, default=10)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--n-hosts", type=int, default=20000)
-    ap.add_argument("--k-per-host", type=int, default=8)
+    ap.add_argument("--n-hosts", type=int, default=N_HOSTS)
+    ap.add_argument("--k-per-host", type=int, default=K_PER_HOST)
     ap.add_argument("--maxdepth", type=int, default=2)
     ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--use-bloom", action="store_true")

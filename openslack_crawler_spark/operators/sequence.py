@@ -26,10 +26,11 @@ def with_dense_seq(
     col_name: str = "seq",
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Assign col_name = start + (0-based global rank by order_cols).
-    checkpoint_dir switches the mandatory lineage cut to a reliable
-    checkpoint (cluster path: survives executor loss)."""
+    Returns (df, row total): the per-partition counts it collects
+    already sum to it. checkpoint_dir switches the mandatory lineage cut
+    to a reliable checkpoint (cluster path: survives executor loss)."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
@@ -62,4 +63,4 @@ def with_dense_seq(
         .join(off_df, "_pid")
         .withColumn(col_name, (F.col("_off") + F.col("_lrn") - 1).cast("long"))
         .drop("_pid", "_lrn", "_off")
-    )
+    ), acc - start

@@ -10,10 +10,10 @@ round-based virtual clock. pytest asserts crawl-ordering equality,
 URL-seen set equality (north_rule), and span-sequence equality
 (input_hint) between this oracle and the Spark round job.
 
-This file intentionally shares `_canonicalize_one`, `py_outlinks`,
-`py_spans` with the engine: the oracle differs ONLY in execution
-strategy (sequential loop vs DataFrame job), which is exactly what the
-parity test is meant to pin down.
+This file intentionally shares `_canonicalize_one`, `py_page_id`,
+`py_outlinks` and `py_spans` with the engine: the oracle differs ONLY
+in execution strategy (sequential loop vs DataFrame job), which is
+exactly what the parity test is meant to pin down.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from .functions.url import _canonicalize_one
-from .synthetic import py_outlinks, py_spans
+from .synthetic import py_outlinks, py_page_id, py_spans
 
 DEFAULT_CRAWL_DELAY = 1.0
 DEFAULT_MAX_PARALLEL = 8
@@ -119,9 +119,7 @@ class CrawlOracle:
         def fails(r: OracleRequest) -> bool:
             if not self.failure_mod:
                 return False
-            import re
-
-            p = int(re.search(r"/(\d+)$", r.url).group(1))
+            p = py_page_id(r.url)
             return (p + r.retry_times * 7919) % self.failure_mod == 3
 
         failed = [r for r, _ in fetched if fails(r)]

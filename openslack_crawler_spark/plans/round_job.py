@@ -297,14 +297,13 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     accepted = flagged.filter(F.col("_enqueue_ok")).drop("_enqueue_ok")
 
     # 8. dense enqueue_seq continuing the global sequence
-    accepted = with_dense_seq(
+    accepted, n_enqueued = with_dense_seq(
         accepted, pop_order, start=next_seq, col_name="enqueue_seq",
         checkpoint_dir=cfg.checkpoint_dir,
-    ).drop("parent_score", "parent_seq", "anchor_offset")
+    )
     accepted = fr.with_salt(accepted, cfg.salt_buckets)
     new_rows = accepted.select(*[c for c in frontier.columns])
     new_rows = _ckpt(new_rows, cfg.checkpoint_dir)
-    n_enqueued = new_rows.count()
     # accepted fingerprints carry their enqueue_seq into the seen table
     # (added_seq orders fingerprint-TTL expiry); blacklist/expiry-dropped
     # fingerprints keep NULL
@@ -324,7 +323,7 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
         retry_rows = fr.decay_for_retry(
             failed.filter(F.col("retry_times") < cfg.retry_max)
         )
-        retry_rows = with_dense_seq(
+        retry_rows, n_retries = with_dense_seq(
             retry_rows,
             [F.col("score").desc(), F.col("enqueue_seq").asc()],
             start=next_seq + n_enqueued,
@@ -337,7 +336,6 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
             .select(*[c for c in frontier.columns]),
             cfg.checkpoint_dir,
         )
-        n_retries = retry_rows.count()
         new_rows = new_rows.unionByName(retry_rows)
 
     # 9. next frontier state + seen append + counters, one atomic commit

@@ -9,6 +9,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """~60% of the box's MemTotal, 1g to 31g (≤31g keeps the JVM's
+    compressed oops; measured 48g heaps GC-thrash 3-4x on wide-row
+    shuffles in local[32])."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    return f"{max(1, min(31, int(kb * 0.6 / 2**20)))}g"
+
+
 def get_spark(
     app_name: str = "openslack-crawler-spark",
     cores: int | None = None,
@@ -17,8 +26,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession.
 
-    cores=None → honor $SPARK_GRAFT_CPUS (default 32) in local mode,
-    or whatever master an external spark-submit supplied.
+    cores=None → honor $SPARK_GRAFT_CPUS (default: the CPUs this
+    process may run on) in local mode, or whatever master an external
+    spark-submit supplied. The driver heap is $SPARK_GRAFT_DRIVER_MEM
+    (default: default_driver_memory()).
     """
     # executor python workers import this package by name (pandas UDFs,
     # applyInPandas) — make sure they can resolve it regardless of cwd.
@@ -29,7 +40,9 @@ def get_spark(
             pkg_root + os.pathsep + os.environ.get("PYTHONPATH", "")
         ).rstrip(os.pathsep)
 
-    env_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    env_cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     n = cores or env_cpus
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{n}]")
     sp = shuffle_partitions or max(n, 8)
@@ -74,9 +87,10 @@ def get_spark(
         # speculative flip.
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # ≤31g keeps JVM compressed oops; measured 48g heaps GC-thrash
-        # 3-4x on wide-row shuffles in local[32]
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     # In a pre-existing session (e.g. driver harness) master is already set.
     if not SparkSession.getActiveSession():

@@ -81,7 +81,7 @@ def enqueue_batch(fmt: SnapshotParquetFormat, batch: DataFrame, epoch_id: int) -
     from ..operators.sequence import with_dense_seq
 
     # (appid, url) is unique once deduped: one row per canonical URL
-    cands = with_dense_seq(
+    cands, n_new = with_dense_seq(
         cands, [F.col("appid").asc(), F.col("url").asc()], start=next_seq,
         col_name="enqueue_seq",
     )
@@ -92,7 +92,6 @@ def enqueue_batch(fmt: SnapshotParquetFormat, batch: DataFrame, epoch_id: int) -
         "score", "appid", "crawlid", "spiderid", "retry_times", "expires",
         "dont_filter", "enqueue_seq", "salt", "attrs",
     ).localCheckpoint()
-    n_new = new_rows.count()
     new_seen = new_rows.select(
         "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
     )

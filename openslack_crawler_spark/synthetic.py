@@ -17,6 +17,8 @@ fetch simulator (plans/round_job.py) and the pure-Python parity oracle
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -149,21 +151,30 @@ def outlink_exprs(page_id, host_id, n_hosts: int):
     )
 
 
+# Page id = the digits of the last path segment; a query string (a
+# canonicalized messy seed: /p/17?a=1&b=2) is ignored. One pattern for
+# the Spark expression and its Python twins.
+PAGE_ID_RE = r"/(\d+)(?:\?.*)?$"
+HOST_ID_RE = r"host-(\d+)\.example"
+
+
 def page_id_of(url_col):
     """Inverse of the URL scheme above: numeric page id from path tail."""
-    return F.regexp_extract(url_col, r"/(\d+)$", 1).cast("long")
+    return F.regexp_extract(url_col, PAGE_ID_RE, 1).cast("long")
 
 
 def host_id_of(url_col):
-    return F.regexp_extract(url_col, r"host-(\d+)\.example", 1).cast("long")
+    return F.regexp_extract(url_col, HOST_ID_RE, 1).cast("long")
 
 
 # pure-Python twins (used by the parity oracle — same constants)
-def py_outlinks(url: str, n_hosts: int) -> list[str]:
-    import re
+def py_page_id(url: str) -> int:
+    return int(re.search(PAGE_ID_RE, url).group(1))
 
-    p = int(re.search(r"/(\d+)$", url).group(1))
-    h = int(re.search(r"host-(\d+)\.example", url).group(1))
+
+def py_outlinks(url: str, n_hosts: int) -> list[str]:
+    p = py_page_id(url)
+    h = int(re.search(HOST_ID_RE, url).group(1))
     n_out = (p * 2654435761 + 97) % (N_OUTLINKS_MAX + 1)
     out = []
     for j in range(1, n_out + 1):
@@ -177,9 +188,7 @@ def py_outlinks(url: str, n_hosts: int) -> list[str]:
 def py_spans(url: str, n_hosts: int) -> list[tuple[str, str, str, int]]:
     """(kind, text, media_ref, offset) spans of a page — the interleaved
     text+media invariant target (input_hint: span-sequence equality)."""
-    import re
-
-    p = int(re.search(r"/(\d+)$", url).group(1))
+    p = py_page_id(url)
     spans = [("text", f"page {p} text", "", 0)]
     for off, link in enumerate(py_outlinks(url, n_hosts), start=1):
         spans.append(("link", link, "", off))

@@ -85,7 +85,10 @@ def test_dense_seq_matches_global_rank(spark):
     df = spark.range(500).select(
         F.col("id"), F.pmod(F.xxhash64("id"), F.lit(1000)).alias("k")
     )
-    got = with_dense_seq(df, [F.col("k").asc(), F.col("id").asc()], start=7, col_name="s")
+    got, n = with_dense_seq(
+        df, [F.col("k").asc(), F.col("id").asc()], start=7, col_name="s"
+    )
+    assert n == 500
     rows = got.orderBy("s").collect()
     assert [r.s for r in rows] == list(range(7, 507))
     resorted = sorted(rows, key=lambda r: (r.k, r.id))
