@@ -90,8 +90,10 @@ _WINDOW = [
     # queries the pop-key dedup edit made module-stale; text_bm25_topk
     # stays as a flagship)
     "text_bm25_topk",
-    # module-stale: streaming/ingest.py (arrival-offset first-wins) and
-    # queries_pipeline.py (crank comment)
+    # module-stale: streaming/ingest.py (arrival-offset first-wins, then
+    # the shared frontier-append tail) and queries_pipeline.py (crank
+    # comment); crawl_e2e* above stay in for the one-pass round
+    # sequencing in plans/round_job.py
     "request_ingest", "streaming_window_counts",
     "content_type_filter", "multimodal_features",
     # module-stale: queries_pipeline.py / queries_media.py edits (r3/r4)

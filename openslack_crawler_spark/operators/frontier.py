@@ -28,6 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schemas import FRONTIER_SCHEMA
+from . import components, sequence
+
 DEPTH_DECAY = 10  # link_spider.py:81
 RETRY_DECAY = 10  # redis_retry.py:20
 DEFAULT_SALT_BUCKETS = 16
@@ -60,36 +63,18 @@ def child_priority(parent_priority):
     return parent_priority - DEPTH_DECAY
 
 
-def apply_enqueue_filters(
-    cands: DataFrame,
-    blacklist: DataFrame | None = None,
-    now_expr=None,
-) -> DataFrame:
-    """Blacklist + expiry + depth filters, in the reference's order
-    (scheduler.py:87-103). Catalyst reorders the cheap predicates
-    anyway (SURVEY.md §4 O1); the blacklist is tiny → broadcast anti."""
-    out = cands.filter(F.col("depth") <= F.col("maxdepth"))
-    now_expr = now_expr if now_expr is not None else F.current_timestamp()
-    out = out.filter(F.col("expires").isNull() | (now_expr < F.col("expires")))
-    if blacklist is not None:
-        out = out.join(
-            F.broadcast(blacklist.select("appid", "crawlid")),
-            ["appid", "crawlid"],
-            "left_anti",
-        )
-    return out
-
-
 def mark_enqueue_filters(
     cands: DataFrame,
     blacklist: DataFrame | None = None,
     now_expr=None,
     flag_col: str = "_enqueue_ok",
 ) -> DataFrame:
-    """Same predicates as apply_enqueue_filters but marking instead of
-    filtering: adds `flag_col` boolean. Lets the caller keep dropped
-    fingerprints (they still enter the seen set, with NULL added_seq)
-    while accepted rows carry their assigned enqueue_seq."""
+    """Depth, expiry and blacklist enqueue filters, in the reference's
+    order (scheduler.py:87-103), as a mark instead of a filter: adds the
+    boolean `flag_col`, True for rows that may join the frontier. Lets
+    the caller keep dropped fingerprints (they still enter the seen set,
+    with NULL added_seq) while accepted rows carry their assigned
+    enqueue_seq. The blacklist is tiny, so it joins as a broadcast."""
     now_expr = now_expr if now_expr is not None else F.current_timestamp()
     ok = (F.col("depth") <= F.col("maxdepth")) & (
         F.col("expires").isNull() | (now_expr < F.col("expires"))
@@ -113,6 +98,34 @@ def mark_enqueue_filters(
 def with_salt(df: DataFrame, buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
     """Hot-host salt bucket: deterministic pmod(url_hash, buckets)."""
     return df.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(buckets)).cast("int"))
+
+
+def as_frontier_rows(df: DataFrame, buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
+    """Salt, then project to the frontier columns (FRONTIER_SCHEMA)."""
+    return with_salt(df, buckets).select(*FRONTIER_SCHEMA.fieldNames())
+
+
+def frontier_appends(
+    df: DataFrame, order_cols: list, start: int, buckets: int = DEFAULT_SALT_BUCKETS
+) -> tuple[DataFrame, int]:
+    """The one path by which rows join the frontier after bootstrap:
+    dense enqueue_seq from `start` in order_cols order, salt, frontier
+    columns, one lineage cut on the session checkpoint seam. Returns
+    (rows, row total). The sequencing and the cut are looked up on their
+    modules at call time, so wrappers installed there see them."""
+    rows, n = sequence.with_dense_seq(
+        df, order_cols, start=start, col_name="enqueue_seq"
+    )
+    return components.ckpt_auto(as_frontier_rows(rows, buckets)), n
+
+
+def seen_rows(rows: DataFrame) -> DataFrame:
+    """Seen-table rows of frontier rows: each fingerprint with the
+    enqueue_seq it entered with. dont_filter rows skip the dupefilter
+    entirely in the reference (scheduler.py:73), so they never enter."""
+    return rows.filter(~F.col("dont_filter")).select(
+        "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
+    )
 
 
 def dequeue_top_k_per_host(

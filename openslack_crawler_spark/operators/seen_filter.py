@@ -69,8 +69,8 @@ def first_wins_dedup(cands: DataFrame, order="enqueue_seq") -> DataFrame:
     `order` is the first-wins key, a column name or a Column, as in
     F.min_by: the row with the smallest key per url_hash is kept. A
     multi-part key is a struct, ascending per field, so a descending
-    component is negated — the round passes its pop order
-    struct(-parent_score, parent_seq, anchor_offset) directly.
+    component is negated — the round passes its pop order, the
+    append key (0, -parent_score, parent_seq, anchor_offset), directly.
 
     API contract: `url_hash` and `order` must be NON-NULL, and `order`
     UNIQUE within a url_hash group — a tie would make the kept row

@@ -24,14 +24,12 @@ def with_dense_seq(
     order_cols: list,
     start: int = 0,
     col_name: str = "seq",
-    num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, int]:
     """Assign col_name = start + (0-based global rank by order_cols).
     Returns (df, row total): the per-partition counts it collects
-    already sum to it. checkpoint_dir switches the mandatory lineage cut
-    to a reliable checkpoint (cluster path: survives executor loss)."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    already sum to it. The mandatory lineage cut follows the session
+    checkpoint seam (`spark.graft.checkpointDir`)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -41,10 +39,7 @@ def with_dense_seq(
     # different boundaries after eviction → duplicate/missing seqs)
     from .components import _ckpt, session_checkpoint_dir  # noqa: PLC0415
 
-    ranged = _ckpt(
-        ranged,
-        checkpoint_dir or session_checkpoint_dir(df.sparkSession),
-    )
+    ranged = _ckpt(ranged, session_checkpoint_dir(df.sparkSession))
     counts = (
         ranged.groupBy("_pid").count().orderBy("_pid").collect()
     )

@@ -10,7 +10,7 @@ One crawl round is ONE DataFrame job committed as ONE snapshot:
    → enqueue filters (expiry, blacklist)                [F4/F5]
    → intra-round first-wins dedup                       [F1]
    → seen anti-join (exact; bloom prefilter optional)   [J1/F3]
-   → dense enqueue_seq assignment (pop-order)           [§7 step 4]
+   → dense enqueue_seq over children + retries, one pass  [§7 step 4]
    → frontier append + seen append + counters           [S5, A1]
 
 This replaces the reference's record-at-a-time Twisted loop
@@ -41,15 +41,15 @@ from ..operators.linkextract import (
     first_per_page,
     links_to_candidates,
 )
-from ..operators.components import _ckpt
+from ..operators.components import ckpt_auto
 from ..operators.seen_filter import (
     PartitionedBloom,
     filter_unseen,
     first_wins_dedup,
 )
-from ..operators.sequence import with_dense_seq
 from ..sources.table_format import SnapshotParquetFormat
 from ..functions.url import with_url_columns
+from ..schemas import FRONTIER_SCHEMA
 
 
 def fetch_order():
@@ -83,10 +83,6 @@ class CrawlConfig:
     # (redis_retry.py:9-22) until retry_max (RETRY_TIMES settings.py:166)
     failure_mod: int = 0
     retry_max: int = 3
-    # reliable checkpoint dir for mid-round lineage cuts (cluster path:
-    # localCheckpoint blocks die with their executor; an HDFS/S3 dir
-    # here makes every cut survive executor loss). None = in-memory.
-    checkpoint_dir: str | None = None
     # snapshot retention: expire snapshots (keep this many) on the same
     # 16-round maintenance cadence as compaction; None = keep all
     # (storage then grows O(history) — set this for long crawls)
@@ -130,6 +126,19 @@ def spans_expr(url_col, n_hosts: int):
     return F.concat(text_span, link_spans, img_span)
 
 
+def append_key(retry: int, score, seq, offset):
+    """Order in which a round's frontier appends take enqueue_seq:
+    children (retry 0) before retries (retry 1), each in the pop order
+    of the row it comes from — score desc, then seq, then the link's
+    offset in its page. Named fields, so both sides of a union match."""
+    return F.struct(
+        F.lit(retry).alias("retry"),
+        (-score).alias("neg_score"),
+        seq.alias("seq"),
+        offset.alias("offset"),
+    )
+
+
 def _partition_counts(df: DataFrame, metric: str, round_id: int) -> DataFrame:
     """Per-partition lineage counters (north_rule) — stats.py:46-55
     rebuilt as a tiny aggregate instead of hincrby round-trips."""
@@ -165,16 +174,11 @@ def bootstrap(
         .withColumn("score", fr.score_expr())
         .withColumn("attrs", F.create_map().cast("map<string,string>"))
     )
-    c = first_wins_dedup(c, "enqueue_seq")
-    c = fr.with_salt(c, cfg.salt_buckets)
-    frontier0 = c.select(
-        "url", "url_hash", "host", "host_hash", "depth", "maxdepth", "priority",
-        "score", "appid", "crawlid", "spiderid", "retry_times", "expires",
-        "dont_filter", "enqueue_seq", "salt", "attrs",
+    # seeds keep their own enqueue_seq (the oracle pops by it)
+    frontier0 = fr.as_frontier_rows(
+        first_wins_dedup(c, "enqueue_seq"), cfg.salt_buckets
     )
-    seen0 = frontier0.select(
-        "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
-    )
+    seen0 = fr.seen_rows(frontier0)
     next_seq = (frontier0.agg(F.max("enqueue_seq")).collect()[0][0] or 0) + 1
     updates = {"frontier": frontier0, "seen": seen0, "robots": robots}
     if cfg.use_bloom:
@@ -186,7 +190,6 @@ def bootstrap(
 def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     """Execute one scheduling round against the current snapshot and
     commit the next snapshot. Returns round stats."""
-    spark = fmt.spark
     meta = fmt.meta()
     round_id = meta["round"] + 1
     next_seq = meta["next_seq"]
@@ -201,11 +204,11 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # then discards (a robots-dropped request is consumed, not requeued:
     # scrapy RobotsTxtMiddleware semantics, settings.py:138)
     popped = fr.dequeue_top_k_per_host(frontier, cfg.k_per_host, salted=True)
-    popped = _ckpt(popped, cfg.checkpoint_dir)
+    popped = ckpt_auto(popped)
     # 2. robots + politeness virtual-clock slots
     batch = po.robots_filter(popped, robots)
     batch = po.assign_fetch_slots(batch, robots, round_start=F.lit(0.0))
-    batch = _ckpt(batch, cfg.checkpoint_dir)  # cut lineage; batch reused 4×
+    batch = ckpt_auto(batch)  # cut lineage; batch reused 4×
 
     n_fetched = batch.count()
     if n_fetched == 0:
@@ -218,7 +221,7 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
 
     # 3. simulated fetch → spans. Failed attempts (ST6) consumed their
     # politeness slot but yield no document and no expansion; they
-    # re-enqueue below with decayed priority.
+    # re-enqueue in step 8 with decayed priority.
     if cfg.failure_mod:
         pid = synthetic.page_id_of(F.col("url"))
         fail_cond = (
@@ -275,20 +278,16 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # intra-round first-wins in pop order, then exact anti-join. The pop
     # order is a total order (parent_seq is row-unique, anchor_offset
     # unique within a page), so dedup and sequencing key on it directly
-    pop_order = [
-        F.col("parent_score").desc(),
-        F.col("parent_seq").asc(),
-        F.col("anchor_offset").asc(),
-    ]
-    cands = first_wins_dedup(
-        cands, F.struct(-F.col("parent_score"), "parent_seq", "anchor_offset")
+    child_key = append_key(
+        0, F.col("parent_score"), F.col("parent_seq"), F.col("anchor_offset")
     )
+    cands = first_wins_dedup(cands, child_key)
     if cfg.use_bloom and fmt.read("bloom") is not None:
         bloom = PartitionedBloom()
         fingerprinted = bloom.prefiltered_unseen(cands, seen, fmt.read("bloom"))
     else:
         fingerprinted = filter_unseen(cands, seen)
-    fingerprinted = _ckpt(fingerprinted, cfg.checkpoint_dir)
+    fingerprinted = ckpt_auto(fingerprinted)
 
     # 7. enqueue filters (blacklist, expiry) — reference order, applied
     # AFTER fingerprinting; dropped rows stay in the seen set (marked,
@@ -296,47 +295,33 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     flagged = fr.mark_enqueue_filters(fingerprinted, blacklist)
     accepted = flagged.filter(F.col("_enqueue_ok")).drop("_enqueue_ok")
 
-    # 8. dense enqueue_seq continuing the global sequence
-    accepted, n_enqueued = with_dense_seq(
-        accepted, pop_order, start=next_seq, col_name="enqueue_seq",
-        checkpoint_dir=cfg.checkpoint_dir,
+    # 8. one dense enqueue_seq pass continuing the global sequence, over
+    # the accepted children and the retry re-enqueues (ST6/W3): failed
+    # fetches with budget left go back with priority-10, retry_times+1,
+    # dont_filter=True, sequenced AFTER the children in pop order (the
+    # parity oracle applies the same rule)
+    carried = [
+        c for c in FRONTIER_SCHEMA.fieldNames() if c not in ("enqueue_seq", "salt")
+    ]
+    joining = accepted.select(*carried, child_key.alias("_key"))
+    if failed is not None:
+        retries = fr.decay_for_retry(
+            failed.filter(F.col("retry_times") < cfg.retry_max)
+        )
+        retry_key = append_key(1, F.col("score"), F.col("enqueue_seq"), F.lit(0))
+        joining = joining.unionByName(
+            retries.select(*carried, retry_key.alias("_key"))
+        )
+    new_rows, n_enqueued = fr.frontier_appends(
+        joining, [F.col("_key").asc()], next_seq, cfg.salt_buckets
     )
-    accepted = fr.with_salt(accepted, cfg.salt_buckets)
-    new_rows = accepted.select(*[c for c in frontier.columns])
-    new_rows = _ckpt(new_rows, cfg.checkpoint_dir)
     # accepted fingerprints carry their enqueue_seq into the seen table
     # (added_seq orders fingerprint-TTL expiry); blacklist/expiry-dropped
-    # fingerprints keep NULL
-    accepted_seen = new_rows.select(
-        "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
-    )
+    # fingerprints keep NULL; retries (dont_filter) never enter it
+    accepted_seen = fr.seen_rows(new_rows)
     dropped_seen = flagged.filter(~F.col("_enqueue_ok")).select(
         "url_hash", "crawlid", F.lit(None).cast("long").alias("added_seq")
     )
-
-    # 8b. retry re-enqueue (ST6/W3): failed fetches with budget left go
-    # back to the frontier with priority-10, retry_times+1,
-    # dont_filter=True — sequenced AFTER this round's children, in pop
-    # order (the parity oracle applies the same rule)
-    n_retries = 0
-    if failed is not None:
-        retry_rows = fr.decay_for_retry(
-            failed.filter(F.col("retry_times") < cfg.retry_max)
-        )
-        retry_rows, n_retries = with_dense_seq(
-            retry_rows,
-            [F.col("score").desc(), F.col("enqueue_seq").asc()],
-            start=next_seq + n_enqueued,
-            col_name="_new_seq",
-            checkpoint_dir=cfg.checkpoint_dir,
-        )
-        retry_rows = _ckpt(
-            retry_rows.drop("enqueue_seq")
-            .withColumnRenamed("_new_seq", "enqueue_seq")
-            .select(*[c for c in frontier.columns]),
-            cfg.checkpoint_dir,
-        )
-        new_rows = new_rows.unionByName(retry_rows)
 
     # 9. next frontier state + seen append + counters, one atomic commit
     remaining = fr.remove_dequeued(frontier, popped)
@@ -362,14 +347,9 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     fmt.commit(
         updates,
         appends=appends,
-        meta={"round": round_id, "next_seq": int(next_seq + n_enqueued + n_retries)},
+        meta={"round": round_id, "next_seq": int(next_seq + n_enqueued)},
     )
-    return {
-        "round": round_id,
-        "fetched": n_fetched,
-        "enqueued": n_enqueued,
-        "retried": n_retries,
-    }
+    return {"round": round_id, "fetched": n_fetched, "enqueued": n_enqueued}
 
 
 def run_crawl(

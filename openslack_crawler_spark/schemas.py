@@ -41,7 +41,9 @@ FRONTIER_SCHEMA = T.StructType(
 # frontier with (bootstrap, streaming ingest, and round commits all
 # populate it); NULL only for fingerprints whose candidate was dropped
 # by the blacklist/expiry/depth enqueue filters (they enter the seen
-# set per check-and-insert but never got a frontier row). added_seq
+# set per check-and-insert but never got a frontier row). dont_filter
+# rows (retries) never enter seen: in the reference they skip the
+# dupefilter entirely (frontier.seen_rows is the one projection). added_seq
 # orders fingerprint-TTL expiry (queries_sessions.seen_ttl_expiry). An
 # exact window over the seen table is enough for the TTL (exact beats
 # the bloom wherever seen is scannable, see operators/seen_filter.py);

@@ -78,28 +78,16 @@ def enqueue_batch(fmt: SnapshotParquetFormat, batch: DataFrame, epoch_id: int) -
     seen = fmt.read("seen")
     if seen is not None:
         cands = filter_unseen(cands, seen)
-    from ..operators.sequence import with_dense_seq
-
     # (appid, url) is unique once deduped: one row per canonical URL
-    cands, n_new = with_dense_seq(
-        cands, [F.col("appid").asc(), F.col("url").asc()], start=next_seq,
-        col_name="enqueue_seq",
+    new_rows, n_new = fr.frontier_appends(
+        cands, [F.col("appid").asc(), F.col("url").asc()], next_seq
     )
-    cands = fr.with_salt(cands)
     frontier = fmt.read("frontier")
-    new_rows = cands.select(
-        "url", "url_hash", "host", "host_hash", "depth", "maxdepth", "priority",
-        "score", "appid", "crawlid", "spiderid", "retry_times", "expires",
-        "dont_filter", "enqueue_seq", "salt", "attrs",
-    ).localCheckpoint()
-    new_seen = new_rows.select(
-        "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
-    )
     fmt.commit(
         updates={
             "frontier": new_rows if frontier is None else frontier.unionByName(new_rows)
         },
-        appends={"seen": new_seen},
+        appends={"seen": fr.seen_rows(new_rows)},
         meta={"round": int(meta.get("round", 0)), "next_seq": next_seq + n_new,
               "epoch": int(epoch_id)},
     )

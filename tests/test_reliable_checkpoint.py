@@ -37,13 +37,13 @@ def test_components_with_reliable_checkpoint(spark, tmp_path):
 def test_crawl_rounds_with_reliable_checkpoint(spark, tmp_path):
     seeds = synthetic.gen_seeds(spark, 300, n_hosts=20)
     robots = synthetic.gen_robots(spark, 20)
-    base_cfg = rj.CrawlConfig(n_hosts=20, k_per_host=4, maxdepth=2)
-    ck_cfg = rj.CrawlConfig(
-        n_hosts=20, k_per_host=4, maxdepth=2,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    fmt_a = rj.run_crawl(spark, str(tmp_path / "a"), seeds, robots, base_cfg, rounds=2)
-    fmt_b = rj.run_crawl(spark, str(tmp_path / "b"), seeds, robots, ck_cfg, rounds=2)
+    cfg = rj.CrawlConfig(n_hosts=20, k_per_host=4, maxdepth=2)
+    fmt_a = rj.run_crawl(spark, str(tmp_path / "a"), seeds, robots, cfg, rounds=2)
+    spark.conf.set("spark.graft.checkpointDir", str(tmp_path / "ckpt"))
+    try:
+        fmt_b = rj.run_crawl(spark, str(tmp_path / "b"), seeds, robots, cfg, rounds=2)
+    finally:
+        spark.conf.unset("spark.graft.checkpointDir")
     order_a = [tuple(r) for r in rj.crawl_order(fmt_a).collect()]
     order_b = [tuple(r) for r in rj.crawl_order(fmt_b).collect()]
     assert order_a == order_b
