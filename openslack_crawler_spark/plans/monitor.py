@@ -33,19 +33,6 @@ def info_all(frontier: DataFrame) -> DataFrame:
     )
 
 
-def info_crawlid(frontier: DataFrame, appid: str, crawlid: str) -> DataFrame:
-    """Single-crawl info (redis-monitor.py:218-262; A4)."""
-    return (
-        frontier.filter((F.col("appid") == appid) & (F.col("crawlid") == crawlid))
-        .agg(
-            F.count(F.lit(1)).alias("total_pending"),
-            F.max("priority").alias("high_priority"),
-            F.min("priority").alias("low_priority"),
-            F.countDistinct("host").alias("total_domains"),
-        )
-    )
-
-
 def stop_crawl(
     fmt: SnapshotParquetFormat, appid: str, crawlid: str, reason: str = "stop"
 ) -> int:

@@ -708,12 +708,12 @@ def q_minhash_incremental_pairs(spark, sf_dir):
     LSH band index of the already-ingested corpus instead of
     re-self-joining the whole corpus each round. The band table is the
     persistable unit: production keeps it bucketed by band_key =
-    hash(band, band_sig) and maintains it with append-only bucketed
-    writes (SnapshotParquetFormat.append_bucketed — an upsert keyed on
+    hash(band, band_sig) (Spark bucketBy / Iceberg bucket(B, band_key))
+    and maintains it with append-only writes (an upsert keyed on
     band_key would evict near-dups' posting rows), so the probe join
     shuffles ONLY the new side — the seen-filter SPJ shape. That plan
     claim is ENFORCED by tests/test_sources_and_bucketing.py::
-    test_band_index_append_bucketed_and_probe_spj (index side
+    test_band_index_probe_spj (index side
     Bucketed:true with no Exchange, one probe-side Exchange, same
     pairs as this query). Pairs report how many of the 4 bands collide
     (the LSH similarity certificate). New-vs-new dedup is the

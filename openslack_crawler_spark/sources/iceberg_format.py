@@ -3,18 +3,22 @@ catalog + runtime jar are on the classpath (real cluster; the sandbox
 has neither — SnapshotParquetFormat is the in-sandbox twin with the
 same API and commit semantics).
 
-Partition specs applied at table creation (SURVEY.md §4 O2/O12):
-- seen:     bucket(N, url_hash)      → storage-partitioned anti-join
-- frontier: bucket(M, host_hash)     → dequeue shuffle reuse
-- documents: days(fetched_at) if present
+Partition specs applied at table creation (SURVEY.md §4 O2/O12; the
+fixed PARTITION_SPECS table below, other tables are unpartitioned):
+- seen:     bucket(256, url_hash)    → storage-partitioned anti-join
+- frontier: bucket(64, host_hash)    → dequeue shuffle reuse
 
 north_rule names Iceberg; this module keeps the letter of that on a
 cluster while the parquet-snapshot seam keeps the sandbox honest.
 
 API parity with SnapshotParquetFormat is load-bearing: run_round calls
 `fmt.commit(updates, appends=..., meta=...)` and run_crawl calls
-`fmt.compact(...)` every 16 rounds, so both classes implement the full
-seam (tests/test_sources_and_bucketing.py asserts signature parity).
+`fmt.compact(...)` every 16 rounds, so both classes expose the same eight
+public methods (current_snapshot_id, current_manifest, meta, read,
+commit, compact, expire_snapshots, destroy) with equal signatures
+(tests/test_sources_and_bucketing.py asserts the parity). Keyed upserts
+are not part of the seam: the crawl state is replaced or appended to,
+never merged.
 """
 
 from __future__ import annotations
@@ -162,9 +166,6 @@ class IcebergFormat:
         rounds.writeTo(self._qualified("rounds")).append()  # commit marker, LAST
         return int(sid)
 
-    def append(self, table: str, df: DataFrame, meta: dict | None = None) -> int:
-        return self.commit(appends={table: df}, meta=meta)
-
     def compact(self, table: str) -> int:
         """Iceberg small-file maintenance: rewrite_data_files via the
         system procedure when the catalog exposes it, else a no-op (the
@@ -177,31 +178,6 @@ class IcebergFormat:
         except Exception:
             pass  # procedure not exposed by this catalog — appends still readable
         return self.current_snapshot_id() or 0
-
-    def merge_upsert(self, table: str, df: DataFrame, key: str) -> int:
-        self._ensure(table, df)
-        df.createOrReplaceTempView("_merge_src")
-        self.spark.sql(
-            f"""
-            MERGE INTO {self._qualified(table)} t USING _merge_src s
-            ON t.{key} = s.{key}
-            WHEN MATCHED THEN UPDATE SET *
-            WHEN NOT MATCHED THEN INSERT *
-            """
-        )
-        return self.current_snapshot_id() or 0
-
-    def merge_upsert_bucketed(
-        self, table: str, df: DataFrame, key: str, num_buckets: int = 64
-    ) -> int:
-        """On Iceberg the engine-level MERGE INTO against a
-        bucket(num_buckets, key)-partitioned table already rewrites only
-        the data files of affected buckets (copy-on-write scoped by the
-        partition spec) — same O(delta buckets) write volume as the
-        parquet twin's hand-rolled bucket dirs."""
-        spec = PARTITION_SPECS.setdefault(table, f"bucket({num_buckets}, {key})")
-        del spec
-        return self.merge_upsert(table, df, key)
 
     def expire_snapshots(self, keep_last: int = 8) -> dict:
         """Iceberg-native snapshot expiry per table + prune the engine's

@@ -38,7 +38,3 @@ def _infer(path: str) -> str:
 def export_documents_jsonl(documents: DataFrame, path: str) -> None:
     """S14: one JSON object per line (jsonp.py:6-16)."""
     documents.write.mode("overwrite").json(path)
-
-
-def export_documents_orc(documents: DataFrame, path: str) -> None:
-    documents.write.mode("overwrite").orc(path)

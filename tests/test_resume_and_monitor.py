@@ -1,7 +1,10 @@
 """Kill/resume exactness (ST5, north_rule 'resumable from checkpoint')
 and monitor actions (info/stop/expire) over the snapshot store."""
 
+import os
+
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from openslack_crawler_spark import synthetic
@@ -17,20 +20,68 @@ def _run(spark, root, rounds, resume=False):
     return rj.run_crawl(spark, root, seeds, robots, cfg, rounds=rounds, resume=resume)
 
 
-def test_kill_resume_exactness(spark, tmp_path):
-    full = _run(spark, str(tmp_path / "full"), ROUNDS)
-    _run(spark, str(tmp_path / "kill"), 1)  # "killed" after round 1
-    resumed = _run(spark, str(tmp_path / "kill"), ROUNDS, resume=True)
+def _state(fmt):
+    """What resume must reproduce: crawl order, seen set, frontier."""
+    return (
+        [(r.round_id, r.url) for r in rj.crawl_order(fmt).collect()],
+        {r.url_hash for r in fmt.read("seen").collect()},
+        {r.url for r in fmt.read("frontier").collect()},
+    )
 
-    fo = [(r.round_id, r.url) for r in rj.crawl_order(full).collect()]
-    ro = [(r.round_id, r.url) for r in rj.crawl_order(resumed).collect()]
-    assert fo == ro
-    assert {r.url_hash for r in full.read("seen").collect()} == {
-        r.url_hash for r in resumed.read("seen").collect()
-    }
-    assert {r.url for r in full.read("frontier").collect()} == {
-        r.url for r in resumed.read("frontier").collect()
-    }
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    return _state(_run(spark, str(tmp_path_factory.mktemp("full")), ROUNDS))
+
+
+class Abort(Exception):
+    pass
+
+
+# round 2's commit writes the frontier update plus the seen, counters,
+# fetch_log and documents append deltas
+ROUND2_WRITES = 5
+ABORTS = [
+    "between_rounds",
+    *(f"write_{k}" for k in range(1, ROUND2_WRITES + 1)),
+    "before_current_swap",
+]
+
+
+@pytest.mark.parametrize("abort", ABORTS)
+def test_kill_resume_exactness(spark, tmp_path, monkeypatch, uninterrupted, abort):
+    """Kill the crawl after round 1, or inside round 2's commit (at each
+    table write, or after its manifest is written but before CURRENT is
+    swapped): the store still shows round 1, and resuming reproduces the
+    uninterrupted crawl exactly."""
+    root = str(tmp_path / "kill")
+    fmt = _run(spark, root, 1)
+    if abort != "between_rounds":
+        before = (fmt.current_snapshot_id(), fmt.meta())
+        writes = []
+        parquet_fn, replace_fn = DataFrameWriter.parquet, os.replace
+
+        def parquet(self, path, *args, **kwargs):
+            writes.append(path)
+            if abort == f"write_{len(writes)}":
+                raise Abort(path)
+            return parquet_fn(self, path, *args, **kwargs)
+
+        def replace(src, dst):
+            if abort == "before_current_swap" and dst.endswith("CURRENT"):
+                raise Abort(dst)
+            return replace_fn(src, dst)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        monkeypatch.setattr(os, "replace", replace)
+        with pytest.raises(Abort):
+            _run(spark, root, 2, resume=True)
+        monkeypatch.undo()
+        if abort == "before_current_swap":
+            assert len(writes) == ROUND2_WRITES
+        assert (fmt.current_snapshot_id(), fmt.meta()) == before
+    resumed = _run(spark, root, ROUNDS, resume=True)
+    assert _state(resumed) == uninterrupted
 
 
 @pytest.fixture()

@@ -36,76 +36,30 @@ def test_documents_jsonl_export(spark, tmp_path):
 
 
 def test_table_format_seam_signature_parity():
-    """IcebergFormat must expose the exact SnapshotParquetFormat surface
+    """IcebergFormat must expose exactly the SnapshotParquetFormat surface
     run_crawl/run_round depend on (commit with appends=, compact, read
-    with snapshot_id, merge_upsert, ...) — the cluster path must not
-    TypeError at the round-16 compaction (ADVICE round 1)."""
+    with snapshot_id, ...) — the cluster path must not TypeError at the
+    round-16 compaction. Both public method sets are enumerated, so a
+    method added to one class only fails here."""
     import inspect
 
     from openslack_crawler_spark.sources.iceberg_format import IcebergFormat
     from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
 
-    for name in (
-        "commit", "append", "compact", "merge_upsert",
-        "merge_upsert_bucketed", "expire_snapshots", "read", "meta",
-        "current_snapshot_id", "current_manifest", "destroy",
-    ):
-        twin = getattr(SnapshotParquetFormat, name)
-        ice = getattr(IcebergFormat, name)
-        assert inspect.signature(twin) == inspect.signature(ice), name
+    def surface(cls):
+        return {
+            name: inspect.signature(fn)
+            for name, fn in inspect.getmembers(cls, inspect.isfunction)
+            if not name.startswith("_")
+        }
 
-
-def test_bucketed_merge_rewrites_only_affected_buckets(spark, tmp_path):
-    """Partition-scoped MERGE (round-1 verdict #6): write volume must be
-    O(delta buckets), not O(table) — measured by rows in the new data
-    dir vs table size."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
-
-    fmt = SnapshotParquetFormat(str(tmp_path / "store"), spark)
-    B, N = 64, 50000
-    base = spark.range(N).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    fmt.merge_upsert_bucketed("docs", base, "k", num_buckets=B)
-
-    # upsert 40 keys (20 updates + 20 inserts) → few buckets touched
-    delta = spark.range(N - 20, N + 20).select(
-        F.col("id").alias("k"), F.lit(-1).cast("long").alias("v")
-    )
-    affected = {
-        r["_b"]
-        for r in delta.select(
-            F.pmod(F.xxhash64("k"), F.lit(B)).cast("int").alias("_b")
-        ).distinct().collect()
+    twin, ice = surface(SnapshotParquetFormat), surface(IcebergFormat)
+    assert set(twin) == set(ice) == {
+        "current_snapshot_id", "current_manifest", "meta", "read",
+        "commit", "compact", "expire_snapshots", "destroy",
     }
-    sid = fmt.merge_upsert_bucketed("docs", delta, "k")
-
-    # semantics: new rows win on key collision, everything else intact
-    out = fmt.read("docs")
-    assert out.count() == N + 20
-    assert out.filter(F.col("v") == -1).count() == 40
-    assert out.filter((F.col("k") == 0) & (F.col("v") == 0)).count() == 1
-
-    # write volume: the new dir holds only the affected buckets' rows
-    new_dirs = glob.glob(str(tmp_path / "store" / "data" / "docs" / f"{sid}-*"))
-    assert len(new_dirs) == 1
-    rewritten = spark.read.parquet(new_dirs[0]).count()
-    expected_bucket_rows = out.withColumn(
-        "_b", F.pmod(F.xxhash64("k"), F.lit(B)).cast("int")
-    ).filter(F.col("_b").isin(list(affected))).count()
-    assert rewritten == expected_bucket_rows
-    assert rewritten < N * 0.8  # strictly less than a full-table rewrite
-    # untouched buckets' dirs are carried forward from the first write
-    entry = fmt.current_manifest()["tables"]["docs"]
-    carried = [p for b, p in entry["buckets"].items() if int(b) not in affected]
-    assert carried and all(f"{sid}-" not in p for p in carried)
-
-    # time travel still sees the pre-merge table
-    assert fmt.read("docs", snapshot_id=sid - 1).count() == N
+    for name, sig in twin.items():
+        assert sig == ice[name], name
 
 
 def test_expire_snapshots_bounds_storage(spark, tmp_path):
@@ -124,7 +78,8 @@ def test_expire_snapshots_bounds_storage(spark, tmp_path):
     base = spark.range(100).select(F.col("id").alias("k"))
     fmt.commit({"t": base})                       # sid 0
     for i in range(5):                            # sids 1-5: append deltas
-        fmt.append("log", spark.range(i * 10, i * 10 + 10).select(F.col("id").alias("k")))
+        delta = spark.range(i * 10, i * 10 + 10).select(F.col("id").alias("k"))
+        fmt.commit(appends={"log": delta})
     fmt.commit({"t": base.filter("k < 50")})      # sid 6
 
     report = fmt.expire_snapshots(keep_last=2)    # keep sids 5, 6
@@ -149,30 +104,6 @@ def test_expire_snapshots_bounds_storage(spark, tmp_path):
     assert report2["removed_dirs"] == 1           # the old full t dir
     assert fmt.read("t").count() == 50
     assert fmt.read("log").count() == 50          # deltas all still referenced
-
-
-def test_bucketed_merge_into_absent_bucket(spark, tmp_path):
-    """Incoming keys whose hash bucket has no dir yet must insert
-    cleanly (no survivors read for those buckets) and appear on read."""
-    from pyspark.sql import functions as F
-
-    from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
-
-    fmt = SnapshotParquetFormat(str(tmp_path / "s"), spark)
-    base = spark.createDataFrame([(1, 10)], "k long, v long")
-    fmt.merge_upsert_bucketed("t", base, "k", num_buckets=64)
-    n_buckets_before = len(fmt.current_manifest()["tables"]["t"]["buckets"])
-    assert n_buckets_before == 1
-    delta = spark.range(2, 40).select(F.col("id").alias("k"), F.lit(0).alias("v"))
-    fmt.merge_upsert_bucketed("t", delta, "k")
-    out = fmt.read("t")
-    assert out.count() == 39
-    assert out.filter("k = 1 and v = 10").count() == 1
-    # compact preserves the bucketed layout and contents
-    fmt.compact("t")
-    entry = fmt.current_manifest()["tables"]["t"]
-    assert isinstance(entry, dict) and entry["num_buckets"] == 64
-    assert fmt.read("t").count() == 39
 
 
 def test_bucketed_seen_join_is_shuffle_free(spark, tmp_path):
@@ -204,44 +135,6 @@ def test_bucketed_seen_join_is_shuffle_free(spark, tmp_path):
     expected = cands.join(seen, "url_hash", "left_anti").count()
     assert j.count() == expected
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_bucketed_table_survives_plain_commits(spark, tmp_path):
-    """Round-3 ADVICE (medium): a plain commit/append to OTHER tables must
-    carry a bucketed table's manifest entry through unchanged — the crawl
-    round loop commits every round, so bucketed tables must coexist with
-    it. Direct commit/append to the bucketed table itself is an explicit
-    error (route through merge_upsert_bucketed)."""
-    import pytest
-
-    from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
-
-    fmt = SnapshotParquetFormat(str(tmp_path / "store"), spark)
-    docs = spark.range(1000).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    fmt.merge_upsert_bucketed("docs", docs, "k", num_buckets=8)
-
-    # a plain commit to an unrelated table (what run_crawl does per round)
-    counters = spark.range(3).select(F.col("id").alias("c"))
-    fmt.commit({"counters": counters})
-    fmt.append("counters", counters)
-
-    # the bucketed entry survived: read() works, layout intact
-    entry = fmt.current_manifest()["tables"]["docs"]
-    assert isinstance(entry, dict) and entry["num_buckets"] == 8
-    assert fmt.read("docs").count() == 1000
-    # expire_snapshots no longer trips over the entry either
-    fmt.expire_snapshots(keep_last=2)
-    assert fmt.read("docs").count() == 1000
-
-    # writing to the bucketed table through the plain path is refused
-    with pytest.raises(ValueError, match="bucketed layout"):
-        fmt.commit({"docs": docs})
-    with pytest.raises(ValueError, match="bucketed layout"):
-        fmt.append("docs", docs)
-    # and a later bucketed merge still works
-    delta = spark.range(1000, 1010).select(F.col("id").alias("k"), F.lit(-1).cast("long").alias("v"))
-    fmt.merge_upsert_bucketed("docs", delta, "k")
-    assert fmt.read("docs").count() == 1010
 
 
 def test_message_sinks_plans_and_selection(spark, tmp_path):
@@ -285,21 +178,20 @@ def test_message_sinks_plans_and_selection(spark, tmp_path):
     assert got == 2
 
 
-def test_band_index_append_bucketed_and_probe_spj(spark, tmp_path):
+def test_band_index_probe_spj(spark):
     """Round-3 verdict #6 — prove the incremental-dedup SPJ claim
-    (queries_textdedup.q_minhash_incremental_pairs docstring): the
-    MinHash band index persists bucketed by band_key = hash(band,
-    band_sig), maintenance is an O(delta buckets) append (NOT an
-    upsert: near-dups share band_key, a keyed upsert would drop their
-    posting rows), and the new-batch probe join shuffles ONLY the
-    probe side — the same storage-partitioned shape as the seen join."""
+    (queries_textdedup.q_minhash_incremental_pairs docstring): with the
+    MinHash band index bucketed by band_key = hash(band, band_sig)
+    (Spark bucketBy here, Iceberg bucket(B, band_key) on a cluster), the
+    new-batch probe join shuffles ONLY the probe side — the same
+    storage-partitioned shape as the seen join — and finds the same
+    pairs as the registered query."""
     from openslack_crawler_spark.queries_textdedup import (
         INCR_NEW_MOD,
         minhash_band_table,
         q_minhash_incremental_pairs,
         words_col,
     )
-    from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
 
     sf_dir = "/root/testdata/sf0.001"
     docs = (
@@ -312,19 +204,6 @@ def test_band_index_append_bucketed_and_probe_spj(spark, tmp_path):
     is_new = F.pmod(F.col("doc_id"), F.lit(INCR_NEW_MOD)) == 0
     index_bands = bands.filter(~is_new)
     probe_bands = bands.filter(is_new)
-
-    # --- maintenance: append-only bucketed writes, O(delta buckets) ---
-    fmt = SnapshotParquetFormat(str(tmp_path / "bandidx"), spark)
-    first = index_bands.filter(F.pmod("doc_id", F.lit(2)) == 1)
-    delta = index_bands.filter(F.pmod("doc_id", F.lit(2)) == 0).limit(5)
-    fmt.append_bucketed("band_index", first, "band_key", num_buckets=16)
-    before = dict(fmt.current_manifest()["tables"]["band_index"]["buckets"])
-    fmt.append_bucketed("band_index", delta)
-    after = dict(fmt.current_manifest()["tables"]["band_index"]["buckets"])
-    untouched = [b for b in before if before[b] == after[b]]
-    assert untouched, "append must carry untouched bucket dirs forward"
-    # nothing dropped: same band_key never evicts existing posting rows
-    assert fmt.read("band_index").count() == first.count() + delta.count()
 
     # --- probe plan: index side storage-partitioned, probe side shuffles ---
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
