@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openslack_crawler_spark import (
@@ -33,6 +33,8 @@ from openslack_crawler_spark import (
     queries_substring,
     queries_textdedup,
 )
+from openslack_crawler_spark.functions.url import with_url_columns
+from openslack_crawler_spark.operators import frontier as fr, politeness as po, seen_filter
 
 _REGISTRIES = [
     queries_relational.REGISTRY,
@@ -140,12 +142,13 @@ def _ordered_items():
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: one crawl-scheduling round — frontier build → seen
-    anti-join dedup → per-host top-k dequeue → politeness slot
-    assignment — over a frontier synthesized from sf0.001 events."""
+    """Flagship: one crawl-scheduling round built from the round job's
+    own operators — URL columns → seen anti-join → per-host top-k
+    dequeue → politeness slot assignment — over a frontier synthesized
+    from sf0.001 events."""
     sf_dir = "/root/testdata/sf0.001"
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    frontier = events.select(
+    urls = events.select(
         F.concat(
             F.lit("http://host-"), F.col("user_id").cast("string"),
             F.lit(".example/p/"), F.col("event_id").cast("string"),
@@ -153,19 +156,21 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("user_id").alias("host_id"),
         F.col("event_id").alias("enqueue_seq"),
         F.floor("value").cast("int").alias("priority"),
-    ).withColumn("url_hash", F.xxhash64("url")).withColumn(
-        "score", F.col("priority").cast("double")
+    )
+    frontier = with_url_columns(urls, canonicalize=False).withColumn(
+        "score", fr.score_expr()
     )
     # seen = every third URL already crawled
-    seen = frontier.filter(F.pmod("enqueue_seq", F.lit(3)) == 0).select("url_hash")
-    fresh = frontier.join(seen, "url_hash", "left_anti")
-    w = Window.partitionBy("host_id").orderBy(F.col("score").desc(), F.col("enqueue_seq").asc())
-    batch = fresh.withColumn("fetch_rank", F.row_number().over(w)).filter(
-        F.col("fetch_rank") <= 8
+    seen = frontier.filter(F.pmod("enqueue_seq", F.lit(3)) == 0)
+    batch = fr.dequeue_top_k_per_host(
+        seen_filter.filter_unseen(frontier, seen), 8, salted=False
     )
-    return batch.select(
-        "url", "host_id", "priority", "fetch_rank",
-        (F.floor((F.col("fetch_rank") - 1) / 4) * 1.0).alias("fetch_at"),
+    # every host: 1 s crawl delay, 4 fetches per politeness slot
+    robots = frontier.select(
+        "host", F.lit(1.0).alias("crawl_delay"), F.lit(4).alias("max_parallel")
+    ).distinct()
+    return po.assign_fetch_slots(batch, robots).select(
+        "url", "host_id", "priority", "fetch_rank", "fetch_at"
     )
 
 

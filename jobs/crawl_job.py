@@ -46,7 +46,6 @@ def main() -> None:
     ap.add_argument("--n-hosts", type=int, default=N_HOSTS)
     ap.add_argument("--k-per-host", type=int, default=K_PER_HOST)
     ap.add_argument("--maxdepth", type=int, default=2)
-    ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--use-bloom", action="store_true")
     args = ap.parse_args()
 
@@ -66,7 +65,6 @@ def main() -> None:
         n_hosts=args.n_hosts,
         k_per_host=args.k_per_host,
         maxdepth=args.maxdepth,
-        salt_buckets=args.salt_buckets,
         use_bloom=args.use_bloom,
     )
     fmt = rj.run_crawl(

@@ -302,15 +302,6 @@ def _canonicalize_arrow(arr: pa.Array) -> pa.Array:
     return pc.replace_with_mask(arr, nonfast, sub_out)
 
 
-@F.pandas_udf(T.StringType())
-def canonicalize_with_base_udf(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    """Vectorized canonicalizer resolving relative URLs against a base
-    column (lxmlhtml.py:53-62 urljoin semantics)."""
-    return pd.Series(
-        [_canonicalize_one(u, b) for u, b in zip(urls, bases)], dtype="object"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Round 6: host extraction inside the Arrow pass (guide §4.2).
 #

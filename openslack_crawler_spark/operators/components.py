@@ -43,10 +43,10 @@ def session_checkpoint_dir(spark) -> str | None:
     return v or os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or None
 
 
-def ckpt_auto(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Lineage cut honoring the session checkpoint seam (drop-in for
-    the query paths' bare .localCheckpoint() calls)."""
-    return _ckpt(df, session_checkpoint_dir(df.sparkSession), eager=eager)
+def ckpt_auto(df: DataFrame) -> DataFrame:
+    """Eager lineage cut honoring the session checkpoint seam (drop-in
+    for the query paths' bare .localCheckpoint() calls)."""
+    return _ckpt(df, session_checkpoint_dir(df.sparkSession))
 
 
 def _ckpt(df: DataFrame, checkpoint_dir: str | None, eager: bool = True) -> DataFrame:

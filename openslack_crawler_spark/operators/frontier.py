@@ -64,25 +64,20 @@ def child_priority(parent_priority):
 
 
 def mark_enqueue_filters(
-    cands: DataFrame,
-    blacklist: DataFrame | None = None,
-    now_expr=None,
-    flag_col: str = "_enqueue_ok",
+    cands: DataFrame, blacklist: DataFrame | None = None
 ) -> DataFrame:
     """Depth, expiry and blacklist enqueue filters, in the reference's
     order (scheduler.py:87-103), as a mark instead of a filter: adds the
-    boolean `flag_col`, True for rows that may join the frontier. Lets
+    boolean `_enqueue_ok`, True for rows that may join the frontier. Lets
     the caller keep dropped fingerprints (they still enter the seen set,
     with NULL added_seq) while accepted rows carry their assigned
     enqueue_seq. The blacklist is tiny, so it joins as a broadcast."""
-    now_expr = now_expr if now_expr is not None else F.current_timestamp()
     ok = (F.col("depth") <= F.col("maxdepth")) & (
-        F.col("expires").isNull() | (now_expr < F.col("expires"))
+        F.col("expires").isNull() | (F.current_timestamp() < F.col("expires"))
     )
     # NULL depth/maxdepth must yield False, not NULL — a NULL flag would
-    # escape BOTH filter(ok) and filter(~ok) downstream, so the row's
-    # fingerprint would enter neither accepted_seen nor dropped_seen and
-    # the URL could be re-crawled later.
+    # escape BOTH filter(ok) and filter(~ok) downstream, so a caller that
+    # splits on it could lose the row's fingerprint and re-crawl the URL.
     ok = F.coalesce(ok, F.lit(False))
     if blacklist is not None:
         bl = F.broadcast(
@@ -91,8 +86,8 @@ def mark_enqueue_filters(
         )
         cands = cands.join(bl, ["appid", "crawlid"], "left")
         ok = ok & F.col("_blacklisted").isNull()
-        return cands.withColumn(flag_col, ok).drop("_blacklisted")
-    return cands.withColumn(flag_col, ok)
+        return cands.withColumn("_enqueue_ok", ok).drop("_blacklisted")
+    return cands.withColumn("_enqueue_ok", ok)
 
 
 def with_salt(df: DataFrame, buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
@@ -100,29 +95,32 @@ def with_salt(df: DataFrame, buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
     return df.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(buckets)).cast("int"))
 
 
-def as_frontier_rows(df: DataFrame, buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
+def as_frontier_rows(df: DataFrame) -> DataFrame:
     """Salt, then project to the frontier columns (FRONTIER_SCHEMA)."""
-    return with_salt(df, buckets).select(*FRONTIER_SCHEMA.fieldNames())
+    return with_salt(df).select(*FRONTIER_SCHEMA.fieldNames())
 
 
 def frontier_appends(
-    df: DataFrame, order_cols: list, start: int, buckets: int = DEFAULT_SALT_BUCKETS
+    df: DataFrame, order_cols: list, start: int, where: str | None = None
 ) -> tuple[DataFrame, int]:
     """The one path by which rows join the frontier after bootstrap:
     dense enqueue_seq from `start` in order_cols order, salt, frontier
     columns, one lineage cut on the session checkpoint seam. Returns
-    (rows, row total). The sequencing and the cut are looked up on their
-    modules at call time, so wrappers installed there see them."""
+    (rows, count of rows that took a seq): with `where`, only that
+    column's True rows take one, the rest keep a NULL enqueue_seq. The
+    sequencing and the cut are looked up on their modules at call time,
+    so wrappers installed there see them."""
     rows, n = sequence.with_dense_seq(
-        df, order_cols, start=start, col_name="enqueue_seq"
+        df, order_cols, start=start, col_name="enqueue_seq", where=where
     )
-    return components.ckpt_auto(as_frontier_rows(rows, buckets)), n
+    return components.ckpt_auto(as_frontier_rows(rows)), n
 
 
 def seen_rows(rows: DataFrame) -> DataFrame:
     """Seen-table rows of frontier rows: each fingerprint with the
-    enqueue_seq it entered with. dont_filter rows skip the dupefilter
-    entirely in the reference (scheduler.py:73), so they never enter."""
+    enqueue_seq it entered with (NULL if it never joined the frontier).
+    dont_filter rows skip the dupefilter entirely in the reference
+    (scheduler.py:73), so they never enter."""
     return rows.filter(~F.col("dont_filter")).select(
         "url_hash", "crawlid", F.col("enqueue_seq").alias("added_seq")
     )
@@ -136,7 +134,7 @@ def dequeue_top_k_per_host(
 
     salted=True runs the rank in two phases: per-(host,salt) local
     top-k (parallel even for a hot host), then per-host merge of the
-    ≤ salt_buckets×k survivors — same result, bounded skew.
+    ≤ DEFAULT_SALT_BUCKETS×k survivors — same result, bounded skew.
     """
     if salted and "salt" in frontier.columns:
         w_local = Window.partitionBy("host_hash", "salt").orderBy(*dequeue_order())
@@ -159,9 +157,3 @@ def pop_global_top1(frontier: DataFrame) -> DataFrame:
     """Global priority pop (queue.py:98-109) — TakeOrderedAndProject,
     no full sort."""
     return frontier.orderBy(*dequeue_order()).limit(1)
-
-
-def remove_dequeued(frontier: DataFrame, batch: DataFrame) -> DataFrame:
-    """Frontier minus the dequeued batch (the zremrangebyrank half of
-    the atomic pop, queue.py:98-109) — anti-join on url_hash."""
-    return frontier.join(batch.select("url_hash"), "url_hash", "left_anti")

@@ -28,13 +28,6 @@ from pyspark.sql import functions as F
 from ..functions.url import with_url_columns
 from .frontier import child_priority, score_expr
 
-# deny_extensions default — mirrors scrapy's IGNORED_EXTENSIONS role in
-# FilteringLinkExtractor (lxmlhtml.py:88-90)
-DEFAULT_DENY_EXTENSIONS = ["7z", "apk", "bin", "bmp", "css", "dmg", "doc", "exe",
-                           "gif", "gz", "ico", "iso", "jar", "jpeg", "jpg", "js",
-                           "mov", "mp3", "mp4", "pdf", "png", "rar", "svg", "tar",
-                           "wav", "zip"]
-
 
 def extract_link_spans(documents: DataFrame) -> DataFrame:
     """documents(doc_id, spans, …) → one row per link span, in document

@@ -11,13 +11,14 @@ Reference semantics:
 Spark rebuild (SURVEY.md §2.5 W2): wall-clock pacing becomes a virtual
 clock — within a scheduling round, the i-th fetch against a host (rank
 by the dequeue order) runs in slot floor(i / max_parallel) and is
-stamped fetch_at = round_start + slot * crawl_delay. The parity oracle
-uses the same virtual clock, making "same fetch multiset per politeness
-budget window" checkable.
+stamped fetch_at = slot * crawl_delay (virtual seconds from the round's
+start). The parity oracle uses the same virtual clock, making "same
+fetch multiset per politeness budget window" checkable.
 
 Robots rules for the whole host space are a small table → broadcast
 join; the disallow-prefix test is a JVM-side `exists()` lambda over the
-prefix array (no Python).
+prefix array (no Python). It is a mark (robots_mark), so the round
+keeps disallowed rows in its dequeue cut: they leave the frontier too.
 """
 
 from __future__ import annotations
@@ -32,10 +33,11 @@ DEFAULT_CRAWL_DELAY = 1.0  # settings2.py:14
 DEFAULT_MAX_PARALLEL = 8  # settings2.py:18
 
 
-def robots_filter(batch: DataFrame, robots: DataFrame) -> DataFrame:
-    """Drop URLs whose path starts with a disallowed prefix for their
-    host. robots is broadcast (one row per host — tiny next to the
-    frontier)."""
+def robots_mark(batch: DataFrame, robots: DataFrame) -> DataFrame:
+    """The robots verdict as a mark: adds `_allowed`, True where no
+    disallowed prefix of the row's host starts its path (False, not
+    NULL, when there is no verdict). robots is broadcast (one row per
+    host — tiny next to the frontier)."""
     r = robots.select(
         F.col("host").alias("_r_host"), F.col("disallow").alias("_r_disallow")
     )
@@ -46,41 +48,45 @@ def robots_filter(batch: DataFrame, robots: DataFrame) -> DataFrame:
     allowed = F.col("_r_disallow").isNull() | ~F.exists(
         F.col("_r_disallow"), lambda p: path.startswith(p)
     )
-    return joined.filter(allowed).drop("_r_host", "_r_disallow")
+    return joined.withColumn("_allowed", F.coalesce(allowed, F.lit(False))).drop(
+        "_r_host", "_r_disallow"
+    )
+
+
+def robots_filter(batch: DataFrame, robots: DataFrame) -> DataFrame:
+    """Drop URLs whose path starts with a disallowed prefix for their
+    host."""
+    return robots_mark(batch, robots).filter("_allowed").drop("_allowed")
 
 
 def assign_fetch_slots(
-    batch: DataFrame,
-    robots: DataFrame | None = None,
-    round_start=None,
+    batch: DataFrame, robots: DataFrame, allowed: str | None = None
 ) -> DataFrame:
     """Token-bucket politeness window: per-host rank → slot → fetch_at.
 
     fetch_rank : 1-based per-host rank in dequeue order
     slot       : floor((rank-1) / max_parallel)
-    fetch_at   : round_start + slot * crawl_delay   (virtual seconds)
+    fetch_at   : slot * crawl_delay   (virtual seconds from round start)
+
+    `allowed` names a boolean column (robots_mark's): its True rows take
+    ranks 1..n in dequeue order, the others rank after them.
     """
-    if robots is not None:
-        r = robots.select(
-            F.col("host").alias("_r_host"),
-            F.col("crawl_delay").alias("_crawl_delay"),
-            F.col("max_parallel").alias("_max_parallel"),
-        )
-        out = batch.join(F.broadcast(r), batch["host"] == r["_r_host"], "left").drop(
-            "_r_host"
-        )
-    else:
-        out = batch.withColumn("_crawl_delay", F.lit(None).cast("double")).withColumn(
-            "_max_parallel", F.lit(None).cast("int")
-        )
+    r = robots.select(
+        F.col("host").alias("_r_host"),
+        F.col("crawl_delay").alias("_crawl_delay"),
+        F.col("max_parallel").alias("_max_parallel"),
+    )
+    out = batch.join(F.broadcast(r), batch["host"] == r["_r_host"], "left").drop(
+        "_r_host"
+    )
     delay = F.coalesce(F.col("_crawl_delay"), F.lit(DEFAULT_CRAWL_DELAY))
     cap = F.coalesce(F.col("_max_parallel"), F.lit(DEFAULT_MAX_PARALLEL))
-    w = Window.partitionBy("host_hash").orderBy(*dequeue_order())
+    first = [] if allowed is None else [F.col(allowed).desc()]
+    w = Window.partitionBy("host_hash").orderBy(*first, *dequeue_order())
     out = out.withColumn("fetch_rank", F.row_number().over(w))
     slot = F.floor((F.col("fetch_rank") - 1) / cap)
-    base = F.lit(0.0) if round_start is None else round_start
     return (
         out.withColumn("fetch_slot", slot.cast("int"))
-        .withColumn("fetch_at", (base + slot * delay).cast("double"))
+        .withColumn("fetch_at", (slot * delay).cast("double"))
         .drop("_crawl_delay", "_max_parallel")
     )

@@ -24,11 +24,14 @@ def with_dense_seq(
     order_cols: list,
     start: int = 0,
     col_name: str = "seq",
+    where: str | None = None,
 ) -> tuple[DataFrame, int]:
     """Assign col_name = start + (0-based global rank by order_cols).
     Returns (df, row total): the per-partition counts it collects
-    already sum to it. The mandatory lineage cut follows the session
-    checkpoint seam (`spark.graft.checkpointDir`)."""
+    already sum to it. With `where` (a boolean column) only its True rows
+    take a seq and count; the others keep a NULL col_name. The mandatory
+    lineage cut follows the session checkpoint seam
+    (`spark.graft.checkpointDir`)."""
     n = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(n, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
@@ -36,12 +39,16 @@ def with_dense_seq(
     # EAGER checkpoint: range-partition boundaries come from sampling,
     # so the counts pass and the rank pass MUST observe the same
     # materialization (a lazily-cached plan could recompute with
-    # different boundaries after eviction → duplicate/missing seqs)
+    # different boundaries after eviction → duplicate/missing seqs). It
+    # cannot fold into a later cut: RangePartitioner seeds its sample
+    # from the RDD id, so each execution draws different boundaries.
     from .components import _ckpt, session_checkpoint_dir  # noqa: PLC0415
 
     ranged = _ckpt(ranged, session_checkpoint_dir(df.sparkSession))
+    take = F.lit(True) if where is None else F.col(where)
     counts = (
-        ranged.groupBy("_pid").count().orderBy("_pid").collect()
+        ranged.groupBy("_pid").agg(F.count_if(take).alias("count"))
+        .orderBy("_pid").collect()
     )
     offsets, acc = {}, start
     for row in counts:
@@ -52,10 +59,13 @@ def with_dense_seq(
             [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
         )
     )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
+    # rows that take a seq sort first, so their row numbers run 1..count
+    first = [] if where is None else [take.desc()]
+    w = Window.partitionBy("_pid").orderBy(*first, *order_cols)
+    seq = F.col("_off") + F.col("_lrn") - 1
     return (
         ranged.withColumn("_lrn", F.row_number().over(w))
         .join(off_df, "_pid")
-        .withColumn(col_name, (F.col("_off") + F.col("_lrn") - 1).cast("long"))
+        .withColumn(col_name, F.when(take, seq).cast("long"))
         .drop("_pid", "_lrn", "_off")
     ), acc - start

@@ -1,17 +1,23 @@
 """The scheduling round job — the flagship plan (SURVEY.md §3.1).
 
-One crawl round is ONE DataFrame job committed as ONE snapshot:
+One crawl round is ONE pipeline committed as ONE snapshot:
 
   frontier dequeue (per-host top-k, salted)            [S4/W1, O4]
-   → robots filter + politeness slot assignment         [W2]
+   → robots mark + politeness slots on allowed rows     [W2]
+   ── cut A: the dequeued rows (fetch count observed on its job)
    → simulated fetch → documents with interleaved spans [P5]
    → link extraction + predicates                       [P1/P2, F6-F8]
    → candidate build (depth+1, priority-10)             [W4]
-   → enqueue filters (expiry, blacklist)                [F4/F5]
    → intra-round first-wins dedup                       [F1]
    → seen anti-join (exact; bloom prefilter optional)   [J1/F3]
+   → enqueue filters (expiry, blacklist) as a mark      [F4/F5]
    → dense enqueue_seq over children + retries, one pass  [§7 step 4]
-   → frontier append + seen append + counters           [S5, A1]
+   ── cut B: its range cut; cut C: the appends (incl. dropped children)
+   → frontier replace + seen/counters/fetch_log/documents appends
+     in one commit                                       [S5, A1]
+
+These are the round's only lineage cuts. An empty round ends in the same
+commit, with empty deltas; run_crawl stops after it.
 
 This replaces the reference's record-at-a-time Twisted loop
 (/root/reference/crawler/schedulers/kafka/scheduler.py:124-190 +
@@ -29,7 +35,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import synthetic
@@ -52,6 +58,11 @@ from ..functions.url import with_url_columns
 from ..schemas import FRONTIER_SCHEMA
 
 
+# dequeued url_hashes broadcast to drop them from the frontier: 8 MB,
+# under Spark's default 10 MB autoBroadcastJoinThreshold
+BROADCAST_DEQUEUED_ROWS = 1 << 20
+
+
 def fetch_order():
     """Deterministic total order of fetches within a round."""
     return [
@@ -66,7 +77,6 @@ class CrawlConfig:
     n_hosts: int = 100
     k_per_host: int = 8          # per-host batch budget per round
     maxdepth: int = 2            # scraper_schema.json:22-26 caps at 3
-    salt_buckets: int = 16
     # URL-seen path: False = exact anti-join (the measured winner at
     # every scannable operating point — see the calibration note in
     # operators/seen_filter.py), True = maintain + use the bloom
@@ -175,9 +185,7 @@ def bootstrap(
         .withColumn("attrs", F.create_map().cast("map<string,string>"))
     )
     # seeds keep their own enqueue_seq (the oracle pops by it)
-    frontier0 = fr.as_frontier_rows(
-        first_wins_dedup(c, "enqueue_seq"), cfg.salt_buckets
-    )
+    frontier0 = fr.as_frontier_rows(first_wins_dedup(c, "enqueue_seq"))
     seen0 = fr.seen_rows(frontier0)
     next_seq = (frontier0.agg(F.max("enqueue_seq")).collect()[0][0] or 0) + 1
     updates = {"frontier": frontier0, "seen": seen0, "robots": robots}
@@ -198,26 +206,26 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     seen = fmt.read("seen")
     robots = fmt.read("robots")
     blacklist = fmt.read("blacklist")
+    bloom = fmt.read("bloom") if cfg.use_bloom else None
 
-    # 1. dequeue per-host top-k (salted two-phase rank). The popped rows
-    # leave the frontier permanently — including ones the robots filter
-    # then discards (a robots-dropped request is consumed, not requeued:
-    # scrapy RobotsTxtMiddleware semantics, settings.py:138)
+    # 1-2. dequeue per-host top-k (salted two-phase rank), robots mark,
+    # politeness slots over the allowed rows, then cut A with its row
+    # counts observed on its job. Popped rows leave the frontier even when
+    # robots disallows them (consumed, not requeued: scrapy
+    # RobotsTxtMiddleware semantics, settings.py:138), so step 9 drops the
+    # whole cut from the frontier and the fetch reads its allowed rows
     popped = fr.dequeue_top_k_per_host(frontier, cfg.k_per_host, salted=True)
-    popped = ckpt_auto(popped)
-    # 2. robots + politeness virtual-clock slots
-    batch = po.robots_filter(popped, robots)
-    batch = po.assign_fetch_slots(batch, robots, round_start=F.lit(0.0))
-    batch = ckpt_auto(batch)  # cut lineage; batch reused 4×
-
-    n_fetched = batch.count()
-    if n_fetched == 0:
-        # still consume any popped-but-disallowed rows
-        fmt.commit(
-            {"frontier": fr.remove_dequeued(frontier, popped)},
-            meta={"round": round_id, "next_seq": next_seq, "done": True},
-        )
-        return {"round": round_id, "fetched": 0, "enqueued": 0}
+    marked = po.assign_fetch_slots(
+        po.robots_mark(popped, robots), robots, allowed="_allowed"
+    )
+    observed = Observation("dequeued")
+    dequeued = ckpt_auto(marked.observe(
+        observed,
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if(F.col("_allowed")).alias("allowed"),
+    ))
+    batch = dequeued.filter(F.col("_allowed")).drop("_allowed")
+    n_dequeued, n_fetched = observed.get["rows"], observed.get["allowed"]
 
     # 3. simulated fetch → spans. Failed attempts (ST6) consumed their
     # politeness slot but yield no document and no expansion; they
@@ -232,13 +240,14 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     else:
         failed = None
         ok = batch
-    fetched = ok.withColumn("spans", spans_expr(F.col("url"), cfg.n_hosts))
+    fetched = ok.withColumns({
+        "spans": spans_expr(F.col("url"), cfg.n_hosts),
+        "doc_id": F.concat(F.lit("doc-"), F.col("url_hash").cast("string")),
+    })
 
     documents = fetched.select(
-        F.concat(F.lit("doc-"), F.col("url_hash").cast("string")).alias("doc_id"),
-        "url", "url_hash", "crawlid",
-        F.lit(round_id).alias("fetched_round"),
-        "spans",
+        "doc_id", "url", "url_hash", "crawlid",
+        F.lit(round_id).alias("fetched_round"), "spans",
     )
 
     # 4. fetch log — the crawl-ordering record (parity artifact)
@@ -249,7 +258,7 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
 
     # 5. link extraction from pages still allowed to expand (F6)
     expandable = fetched.filter(F.col("depth") < F.col("maxdepth")).select(
-        F.concat(F.lit("doc-"), F.col("url_hash").cast("string")).alias("doc_id"),
+        "doc_id",
         F.col("depth").alias("parent_depth"),
         "maxdepth",
         F.col("priority").alias("parent_priority"),
@@ -258,19 +267,16 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
         F.col("enqueue_seq").alias("parent_seq"),
         "spans",
     )
-    links = extract_link_spans(expandable)
-    links = first_per_page(links)
     links = apply_link_predicates(
-        links,
+        first_per_page(extract_link_spans(expandable)),
         allowed_domains=cfg.allowed_domains,
         allow_regex=cfg.allow_regex,
         deny_regex=cfg.deny_regex,
         deny_extensions=cfg.deny_extensions,
     )
-    cands = links_to_candidates(links)
     # depth guard happens at extraction time in the reference
     # (link_spider.py:50-56) — BEFORE fingerprinting
-    cands = cands.filter(F.col("depth") <= F.col("maxdepth"))
+    cands = links_to_candidates(links).filter(F.col("depth") <= F.col("maxdepth"))
 
     # 6. dedup FIRST (reference order: the dupefilter is check-AND-insert
     # and runs before blacklist/expiry — scheduler.py:87-103 — so even
@@ -282,53 +288,51 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
         0, F.col("parent_score"), F.col("parent_seq"), F.col("anchor_offset")
     )
     cands = first_wins_dedup(cands, child_key)
-    if cfg.use_bloom and fmt.read("bloom") is not None:
-        bloom = PartitionedBloom()
-        fingerprinted = bloom.prefiltered_unseen(cands, seen, fmt.read("bloom"))
+    if bloom is not None:
+        fingerprinted = PartitionedBloom().prefiltered_unseen(cands, seen, bloom)
     else:
         fingerprinted = filter_unseen(cands, seen)
-    fingerprinted = ckpt_auto(fingerprinted)
 
     # 7. enqueue filters (blacklist, expiry) — reference order, applied
-    # AFTER fingerprinting; dropped rows stay in the seen set (marked,
-    # not filtered, so their fingerprints keep a NULL added_seq below)
+    # AFTER fingerprinting; marked, not filtered: drops stay in seen
     flagged = fr.mark_enqueue_filters(fingerprinted, blacklist)
-    accepted = flagged.filter(F.col("_enqueue_ok")).drop("_enqueue_ok")
 
     # 8. one dense enqueue_seq pass continuing the global sequence, over
-    # the accepted children and the retry re-enqueues (ST6/W3): failed
+    # the flagged children and the retry re-enqueues (ST6/W3): failed
     # fetches with budget left go back with priority-10, retry_times+1,
     # dont_filter=True, sequenced AFTER the children in pop order (the
-    # parity oracle applies the same rule)
+    # parity oracle applies the same rule). Only _enqueue_ok rows take a
+    # seq; dropped children ride along to the seen table through cuts B
+    # (the range cut) and C (the appends cut)
     carried = [
         c for c in FRONTIER_SCHEMA.fieldNames() if c not in ("enqueue_seq", "salt")
     ]
-    joining = accepted.select(*carried, child_key.alias("_key"))
+    joining = flagged.select(*carried, child_key.alias("_key"), "_enqueue_ok")
     if failed is not None:
         retries = fr.decay_for_retry(
             failed.filter(F.col("retry_times") < cfg.retry_max)
-        )
+        ).withColumn("_enqueue_ok", F.lit(True))
         retry_key = append_key(1, F.col("score"), F.col("enqueue_seq"), F.lit(0))
         joining = joining.unionByName(
-            retries.select(*carried, retry_key.alias("_key"))
+            retries.select(*carried, retry_key.alias("_key"), "_enqueue_ok")
         )
-    new_rows, n_enqueued = fr.frontier_appends(
-        joining, [F.col("_key").asc()], next_seq, cfg.salt_buckets
+    appended, n_enqueued = fr.frontier_appends(
+        joining, [F.col("_key").asc()], next_seq, where="_enqueue_ok"
     )
-    # accepted fingerprints carry their enqueue_seq into the seen table
-    # (added_seq orders fingerprint-TTL expiry); blacklist/expiry-dropped
-    # fingerprints keep NULL; retries (dont_filter) never enter it
-    accepted_seen = fr.seen_rows(new_rows)
-    dropped_seen = flagged.filter(~F.col("_enqueue_ok")).select(
-        "url_hash", "crawlid", F.lit(None).cast("long").alias("added_seq")
-    )
+    new_rows = appended.filter(F.col("enqueue_seq").isNotNull())
+    # seen gets EVERY fingerprinted candidate (dupefilter.py check-and-
+    # insert), accepted ones with their enqueue_seq as added_seq (it
+    # orders fingerprint-TTL expiry); retries (dont_filter) never enter
+    new_seen = fr.seen_rows(appended)
 
-    # 9. next frontier state + seen append + counters, one atomic commit
-    remaining = fr.remove_dequeued(frontier, popped)
-    next_frontier = remaining.unionByName(new_rows)
-    # seen gets EVERY fingerprinted candidate (incl. blacklist/expiry
-    # drops), not just frontier appends — dupefilter.py check-and-insert
-    new_seen = accepted_seen.unionByName(dropped_seen)
+    # 9. next frontier state + seen append + counters, one atomic commit.
+    # The frontier drops the dequeued rows (the zremrangebyrank half of the
+    # atomic pop, queue.py:98-109). Spark sizes a join as the product of its
+    # inputs, so the cut's size estimate is useless: its row count decides
+    gone = dequeued.select("url_hash")
+    if n_dequeued <= BROADCAST_DEQUEUED_ROWS:
+        gone = F.broadcast(gone)
+    next_frontier = frontier.join(gone, "url_hash", "left_anti").unionByName(new_rows)
     counters = _partition_counts(batch, "scheduler/dequeued", round_id).unionByName(
         _partition_counts(new_rows, "scheduler/enqueued", round_id)
     )
@@ -342,8 +346,8 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
         "fetch_log": fetch_log,
         "documents": documents,
     }
-    if cfg.use_bloom and fmt.read("bloom") is not None:
-        updates["bloom"] = PartitionedBloom().merge(fmt.read("bloom"), new_seen)
+    if bloom is not None:
+        updates["bloom"] = PartitionedBloom().merge(bloom, new_seen)
     fmt.commit(
         updates,
         appends=appends,

@@ -40,3 +40,44 @@ def test_oracle_sql_subset_and_rows_only_contract():
     qs, os_ = entry.queries(), entry.oracle_sql()
     assert set(os_) <= set(qs)
     assert set(qs) - set(os_) == {"crawl_e2e"}  # the only rows-only entry
+
+
+def test_entry_equals_window_formulation(spark):
+    """entry() composes the round job's operators (URL columns, seen
+    anti-join, per-host top-k, politeness slots); it must return exactly
+    the rows of the plain window formulation over the same events:
+    per host, the top 8 unseen URLs by (priority desc, event_id asc),
+    4 per 1-second slot."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    got = entry.entry(spark)
+    events = spark.read.parquet(*got.inputFiles())
+    frontier = events.select(
+        F.concat(
+            F.lit("http://host-"), F.col("user_id").cast("string"),
+            F.lit(".example/p/"), F.col("event_id").cast("string"),
+        ).alias("url"),
+        F.col("user_id").alias("host_id"),
+        F.col("event_id").alias("enqueue_seq"),
+        F.floor("value").cast("int").alias("priority"),
+    ).withColumn("url_hash", F.xxhash64("url")).withColumn(
+        "score", F.col("priority").cast("double")
+    )
+    seen = frontier.filter(F.pmod("enqueue_seq", F.lit(3)) == 0).select("url_hash")
+    fresh = frontier.join(seen, "url_hash", "left_anti")
+    w = Window.partitionBy("host_id").orderBy(
+        F.col("score").desc(), F.col("enqueue_seq").asc()
+    )
+    want = (
+        fresh.withColumn("fetch_rank", F.row_number().over(w))
+        .filter(F.col("fetch_rank") <= 8)
+        .select(
+            "url", "host_id", "priority", "fetch_rank",
+            (F.floor((F.col("fetch_rank") - 1) / 4) * 1.0).alias("fetch_at"),
+        )
+    )
+    assert got.columns == want.columns
+    assert events.count() == 1000
+    want_rows = sorted(tuple(r) for r in want.collect())
+    assert want_rows and sorted(tuple(r) for r in got.collect()) == want_rows

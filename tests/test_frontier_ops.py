@@ -95,6 +95,38 @@ def test_dense_seq_matches_global_rank(spark):
     assert [r.s for r in resorted] == list(range(7, 507))
 
 
+def test_dense_seq_where_sequences_flagged_rows_only(spark):
+    df = spark.range(300).select(
+        F.col("id"), (F.pmod(F.xxhash64("id"), F.lit(3)) != 0).alias("ok")
+    )
+    got, n = with_dense_seq(
+        df, [F.col("id").desc()], start=5, col_name="s", where="ok"
+    )
+    rows = got.collect()
+    ok = sorted((r for r in rows if r.ok), key=lambda r: -r.id)
+    assert n == len(ok) and 0 < n < 300 and len(rows) == 300
+    assert [r.s for r in ok] == list(range(5, 5 + n))
+    assert all(r.s is None for r in rows if not r.ok)
+
+
+def test_politeness_slots_rank_allowed_rows_only(spark):
+    # u1 and u3 are disallowed: the others take ranks 1-3 in pop order,
+    # so their slots fill as if u1 and u3 were not there
+    rows = [(f"u{i}", i, "h1", 10, 100 - i, float(100 - i), i, 0, False) for i in range(5)]
+    df = _frontier(spark, rows).withColumn("ok", ~F.col("url").isin("u1", "u3"))
+    robots = spark.createDataFrame(
+        [("h1", 1.5, 2, [])], "host string, crawl_delay double, max_parallel int, disallow array<string>"
+    )
+    got = {
+        r.url: (r.fetch_rank, r.fetch_at)
+        for r in assign_fetch_slots(df, robots, allowed="ok").collect()
+    }
+    assert got == {
+        "u0": (1, 0.0), "u2": (2, 0.0), "u4": (3, 1.5),
+        "u1": (4, 1.5), "u3": (5, 3.0),
+    }
+
+
 def test_mark_enqueue_filters_null_flag_coalesced(spark):
     """Round-3 ADVICE: NULL depth/maxdepth must flag False, not NULL —
     a NULL flag escapes both filter(ok) and filter(~ok), so the row's

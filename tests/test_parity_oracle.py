@@ -6,6 +6,7 @@ on the same seed list, same politeness budget, same page graph."""
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from openslack_crawler_spark import synthetic
 from openslack_crawler_spark.oracle import CrawlOracle
@@ -74,8 +75,6 @@ def test_url_seen_set_parity(spark_run, oracle_run):
     oracle_urls = spark_sess.createDataFrame(
         [(u,) for u in oracle_run.seen], "url string"
     )
-    from pyspark.sql import functions as F
-
     oracle_hashes = {
         r.h for r in oracle_urls.select(F.xxhash64("url").alias("h")).collect()
     }
@@ -110,15 +109,20 @@ def test_frontier_state_parity(spark_run, oracle_run):
 # Spark jobs of one steady round (round 2) of this crawl, per
 # failure_mod, as measured (local[4]). Retries share the children's
 # with_dense_seq pass, so a round with retries costs no extra job.
-STEADY_ROUND_MAX_JOBS = {0: 34, 50: 34}
+STEADY_ROUND_MAX_JOBS = {0: 29, 50: 29}
+# eager lineage cuts of one round: the dequeue cut, with_dense_seq's
+# range cut, the frontier-appends cut
+ROUND_MAX_CUTS = 3
 
 
 @pytest.mark.parametrize("failure_mod", sorted(STEADY_ROUND_MAX_JOBS))
-def test_steady_round_job_count(spark, tmp_path, failure_mod):
+def test_steady_round_job_count(spark, tmp_path, monkeypatch, failure_mod):
     """Fixed per-job cost dominates a round at these sizes, so a round
     that grows a Spark job (a recomputed count, an extra sequencing
-    pass) fails here before it shows in a benchmark."""
+    pass) or a lineage cut fails here before it shows in a benchmark."""
     import uuid
+
+    from openslack_crawler_spark.operators import components
 
     seeds = synthetic.gen_seeds(spark, N_SEEDS, n_hosts=N_HOSTS)
     robots = synthetic.gen_robots(spark, N_HOSTS)
@@ -126,6 +130,14 @@ def test_steady_round_job_count(spark, tmp_path, failure_mod):
         n_hosts=N_HOSTS, k_per_host=K, maxdepth=MAXDEPTH, failure_mod=failure_mod
     )
     fmt = rj.run_crawl(spark, str(tmp_path), seeds, robots, cfg, rounds=1)
+    cuts = []
+    ckpt = components._ckpt
+
+    def counted(df, checkpoint_dir, eager=True):
+        cuts.append(df.columns)
+        return ckpt(df, checkpoint_dir, eager)
+
+    monkeypatch.setattr(components, "_ckpt", counted)
     sc = spark.sparkContext
     group = f"steady-round-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "parity crawl round 2")
@@ -136,4 +148,73 @@ def test_steady_round_job_count(spark, tmp_path, failure_mod):
         sc.setLocalProperty("spark.job.description", None)
     assert stats["round"] == 2 and stats["fetched"] > 0
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < jobs <= STEADY_ROUND_MAX_JOBS[failure_mod], jobs
+    assert (
+        0 < jobs <= STEADY_ROUND_MAX_JOBS[failure_mod]
+        and len(cuts) <= ROUND_MAX_CUTS
+    ), (jobs, len(cuts))
+
+
+def _all_disallowed(spark, n_hosts):
+    return synthetic.gen_robots(spark, n_hosts).withColumn(
+        "disallow", F.array(F.lit("/"))
+    )
+
+
+# (robots, maxdepth, rounds): every host disallows "/", so round 1
+# fetches nothing; or nothing expands (maxdepth 0), so the frontier
+# drains and a later round pops nothing
+EMPTY_ROUND_CRAWLS = {
+    "all_disallowed": (_all_disallowed, MAXDEPTH, 4),
+    "frontier_exhausted": (synthetic.gen_robots, 0, 12),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EMPTY_ROUND_CRAWLS))
+def test_empty_round_commits_like_any_round(spark, tmp_path, case):
+    """A round that fetches nothing runs the same commit as any other,
+    with empty deltas: run_crawl stops after it, the empty round adds no
+    fetch_log or counters rows, and the crawl's tables still read (a crawl
+    whose first round fetches nothing has them too) and equal the
+    oracle's."""
+    from openslack_crawler_spark.plans import monitor
+
+    make_robots, maxdepth, rounds = EMPTY_ROUND_CRAWLS[case]
+    n_hosts = 5
+    seeds = synthetic.gen_seeds(spark, 40, n_hosts=n_hosts)
+    robots = make_robots(spark, n_hosts)
+    cfg = rj.CrawlConfig(n_hosts=n_hosts, k_per_host=4, maxdepth=maxdepth)
+    fmt = rj.run_crawl(spark, str(tmp_path), seeds, robots, cfg, rounds=rounds)
+
+    o = CrawlOracle(
+        {
+            r.host: {"crawl_delay": r.crawl_delay, "max_parallel": r.max_parallel,
+                     "disallow": list(r.disallow)}
+            for r in robots.collect()
+        },
+        n_hosts=n_hosts, k_per_host=4, maxdepth=maxdepth,
+    )
+    o.bootstrap([(r.url, r.priority, r.enqueue_seq) for r in seeds.collect()])
+    o.run(rounds)
+
+    last = fmt.meta()["round"]
+    assert last < rounds  # stopped at the empty round
+    assert last == 1 + max((e["round"] for e in o.fetch_log), default=0)
+    order = rj.crawl_order(fmt)
+    rollup = monitor.counters_rollup(fmt.read("counters"))
+    assert order.filter(F.col("round_id") == last).count() == 0
+    assert rollup.filter(F.col("round_id") == last).count() == 0
+    if case == "all_disallowed":
+        assert order.count() == 0 and rollup.count() == 0
+    else:
+        assert fmt.read("frontier").count() == 0
+    assert [(r.round_id, r.url, r.fetch_at) for r in order.collect()] == [
+        (e["round"], e["url"], e["fetch_at"]) for e in o.fetch_log
+    ]
+    assert {
+        (r.url, r.depth, r.priority) for r in fmt.read("frontier").collect()
+    } == {(r.url, r.depth, r.priority) for r in o.frontier}
+    oracle_hashes = {
+        r.h for r in spark.createDataFrame([(u,) for u in o.seen], "url string")
+        .select(F.xxhash64("url").alias("h")).collect()
+    }
+    assert {r.url_hash for r in fmt.read("seen").collect()} == oracle_hashes
