@@ -23,24 +23,18 @@ non-uniform edge would strictly lower the larger side next round.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def session_checkpoint_dir(spark) -> str | None:
-    """Session-wide reliable-checkpoint seam (VERDICT r5 task 6): when
-    `spark.graft.checkpointDir` (conf) or $SPARK_GRAFT_CHECKPOINT_DIR
-    (env) is set, every registered iterative/multi-consumer query
-    routes its lineage cuts through reliable checkpoint() into that dir
-    — on a real cluster localCheckpoint blocks die with an executor.
-    Unset (the sandbox default) keeps the fast in-memory path."""
-    try:
-        v = spark.conf.get("spark.graft.checkpointDir", None)
-    except Exception:
-        v = None
-    return v or os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or None
+    """Session-wide reliable-checkpoint seam: when the session conf
+    `spark.graft.checkpointDir` is set, every registered
+    iterative/multi-consumer query routes its lineage cuts through
+    reliable checkpoint() into that dir — on a real cluster
+    localCheckpoint blocks die with an executor. Unset (the sandbox
+    default) keeps the fast in-memory path."""
+    return spark.conf.get("spark.graft.checkpointDir", None) or None
 
 
 def ckpt_auto(df: DataFrame) -> DataFrame:

@@ -175,12 +175,3 @@ def start_request_ingest(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def start_file_ingest(
-    spark: SparkSession,
-    fmt: SnapshotParquetFormat,
-    incoming_dir: str,
-):
-    """Connector-free ingest twin (kept as the round-1 name)."""
-    return start_request_ingest(spark, fmt, incoming_dir=incoming_dir)

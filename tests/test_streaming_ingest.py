@@ -2,9 +2,15 @@
 → atomic micro-batch enqueue; redelivery is idempotent."""
 
 import json
+import uuid
 
 from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
-from openslack_crawler_spark.streaming.ingest import start_file_ingest
+from openslack_crawler_spark.streaming.ingest import (
+    build_request_source,
+    enqueue_batch,
+    parse_requests,
+    start_request_ingest,
+)
 
 
 def _write_requests(d, rows, name):
@@ -24,7 +30,7 @@ def test_file_ingest_enqueues_and_dedups(spark, tmp_path):
     ]
     _write_requests(incoming, reqs, "batch1.json")
     fmt = SnapshotParquetFormat(str(tmp_path / "store"), spark)
-    q = start_file_ingest(spark, fmt, str(incoming))
+    q = start_request_ingest(spark, fmt, incoming_dir=str(incoming))
     q.awaitTermination(120)
 
     frontier = fmt.read("frontier")
@@ -35,7 +41,7 @@ def test_file_ingest_enqueues_and_dedups(spark, tmp_path):
 
     # redelivery: the same requests arrive again → all dropped as seen
     _write_requests(incoming, reqs[:3], "batch2.json")
-    q2 = start_file_ingest(spark, fmt, str(incoming))
+    q2 = start_request_ingest(spark, fmt, incoming_dir=str(incoming))
     q2.awaitTermination(120)
     assert fmt.read("frontier").count() == 2
 
@@ -86,7 +92,7 @@ def test_ingest_seq_dense_and_unique_across_batches(spark, tmp_path):
         "b1.json",
     )
     fmt = SnapshotParquetFormat(str(tmp_path / "store"), spark)
-    q = start_file_ingest(spark, fmt, str(incoming))
+    q = start_request_ingest(spark, fmt, incoming_dir=str(incoming))
     q.awaitTermination(120)
     assert fmt.meta()["next_seq"] == 2
 
@@ -100,7 +106,7 @@ def test_ingest_seq_dense_and_unique_across_batches(spark, tmp_path):
         ],
         "b2.json",
     )
-    q2 = start_file_ingest(spark, fmt, str(incoming))
+    q2 = start_request_ingest(spark, fmt, incoming_dir=str(incoming))
     q2.awaitTermination(120)
     seqs = sorted(r.enqueue_seq for r in fmt.read("frontier").collect())
     assert seqs == [0, 1, 2, 3]  # dense, monotone, no duplicates
@@ -108,3 +114,41 @@ def test_ingest_seq_dense_and_unique_across_batches(spark, tmp_path):
     # seen rows carry the enqueue_seq they entered with (added_seq)
     added = {r.added_seq for r in fmt.read("seen").collect()}
     assert added == {0, 1, 2, 3}
+
+
+# Spark jobs of one enqueue_batch into an existing store, as measured
+# (local[4]): parse + canonicalize, dedup, seen anti-join, one
+# with_dense_seq pass and the commit
+INGEST_BATCH_MAX_JOBS = 11
+
+
+def test_ingest_batch_job_count(spark, tmp_path):
+    """A micro-batch that grows a Spark job (a recomputed count, a
+    driver round trip in sequencing) fails here before it shows in a
+    benchmark."""
+    fmt = SnapshotParquetFormat(str(tmp_path / "store"), spark)
+
+    def batch(name, rows):
+        d = tmp_path / name
+        d.mkdir()
+        _write_requests(d, rows, "part-0.json")
+        raw, _ = build_request_source(spark, incoming_dir=str(d), streaming=False)
+        return parse_requests(raw)
+
+    enqueue_batch(fmt, batch("b0", [
+        {"url": f"http://h{i % 3}.example/{i}", "appid": "app"} for i in range(20)
+    ]), 0)
+    second = batch("b1", [
+        {"url": f"http://H{i % 3}.EXAMPLE/{i}", "appid": "app"} for i in range(10, 40)
+    ])
+    sc = spark.sparkContext
+    group = f"ingest-batch-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one ingest micro-batch")
+    try:
+        enqueue_batch(fmt, second, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert fmt.meta()["next_seq"] == 40  # pages 10-19 are seen
+    assert 0 < jobs <= INGEST_BATCH_MAX_JOBS, jobs
