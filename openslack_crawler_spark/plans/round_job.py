@@ -13,10 +13,14 @@ One crawl round is ONE pipeline committed as ONE snapshot:
    → enqueue filters (expiry, blacklist) as a mark      [F4/F5]
    → dense enqueue_seq over children + retries, one pass  [§7 step 4]
    ── cut B: its range cut; cut C: the appends (incl. dropped children)
-   → frontier replace + seen/counters/fetch_log/documents appends
-     in one commit                                       [S5, A1]
+   → frontier append + delete delta, seen/counters/fetch_log/documents
+     appends, in one commit                              [S5, A1]
 
-These are the round's only lineage cuts. An empty round ends in the same
+These are the round's only lineage cuts. Every table write is a delta:
+the dequeued rows leave the frontier as (url_hash, enqueue_seq) rows of
+`frontier_deletes`, which reads anti-join away, so a commit writes
+O(round) bytes whatever the frontier's size; run_crawl's 16-round
+compaction folds the deletes back in. An empty round ends in the same
 commit, with empty deltas; run_crawl stops after it.
 
 This replaces the reference's record-at-a-time Twisted loop
@@ -53,14 +57,9 @@ from ..operators.seen_filter import (
     filter_unseen,
     first_wins_dedup,
 )
-from ..sources.table_format import SnapshotParquetFormat
+from ..sources.table_format import SnapshotParquetFormat, deletes_of
 from ..functions.url import with_url_columns
 from ..schemas import FRONTIER_SCHEMA
-
-
-# dequeued url_hashes broadcast to drop them from the frontier: 8 MB,
-# under Spark's default 10 MB autoBroadcastJoinThreshold
-BROADCAST_DEQUEUED_ROWS = 1 << 20
 
 
 def fetch_order():
@@ -209,23 +208,21 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     bloom = fmt.read("bloom") if cfg.use_bloom else None
 
     # 1-2. dequeue per-host top-k (salted two-phase rank), robots mark,
-    # politeness slots over the allowed rows, then cut A with its row
-    # counts observed on its job. Popped rows leave the frontier even when
+    # politeness slots over the allowed rows, then cut A with its fetch
+    # count observed on its job. Popped rows leave the frontier even when
     # robots disallows them (consumed, not requeued: scrapy
-    # RobotsTxtMiddleware semantics, settings.py:138), so step 9 drops the
-    # whole cut from the frontier and the fetch reads its allowed rows
+    # RobotsTxtMiddleware semantics, settings.py:138), so step 9 deletes
+    # the whole cut from the frontier and the fetch reads its allowed rows
     popped = fr.dequeue_top_k_per_host(frontier, cfg.k_per_host, salted=True)
     marked = po.assign_fetch_slots(
         po.robots_mark(popped, robots), robots, allowed="_allowed"
     )
     observed = Observation("dequeued")
-    dequeued = ckpt_auto(marked.observe(
-        observed,
-        F.count(F.lit(1)).alias("rows"),
-        F.count_if(F.col("_allowed")).alias("allowed"),
-    ))
+    dequeued = ckpt_auto(
+        marked.observe(observed, F.count_if(F.col("_allowed")).alias("allowed"))
+    )
     batch = dequeued.filter(F.col("_allowed")).drop("_allowed")
-    n_dequeued, n_fetched = observed.get["rows"], observed.get["allowed"]
+    n_fetched = observed.get["allowed"]
 
     # 3. simulated fetch → spans. Failed attempts (ST6) consumed their
     # politeness slot but yield no document and no expansion; they
@@ -325,26 +322,23 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # orders fingerprint-TTL expiry); retries (dont_filter) never enter
     new_seen = fr.seen_rows(appended)
 
-    # 9. next frontier state + seen append + counters, one atomic commit.
-    # The frontier drops the dequeued rows (the zremrangebyrank half of the
-    # atomic pop, queue.py:98-109). Spark sizes a join as the product of its
-    # inputs, so the cut's size estimate is useless: its row count decides
-    gone = dequeued.select("url_hash")
-    if n_dequeued <= BROADCAST_DEQUEUED_ROWS:
-        gone = F.broadcast(gone)
-    next_frontier = frontier.join(gone, "url_hash", "left_anti").unionByName(new_rows)
+    # 9. frontier delta + seen append + counters, one atomic commit. Every
+    # write is an append — O(round) write work, never O(frontier) or
+    # O(history). The dequeued rows leave the frontier as equality deletes
+    # (the zremrangebyrank half of the atomic pop, queue.py:98-109), keyed
+    # on the row identity: a failed fetch re-enters in this same commit
+    # with its url_hash and a new enqueue_seq, and must survive the delete
     counters = _partition_counts(batch, "scheduler/dequeued", round_id).unionByName(
         _partition_counts(new_rows, "scheduler/enqueued", round_id)
     )
-    # frontier is replaced (dequeues remove rows); seen / documents /
-    # fetch_log / counters are append-only deltas — O(round) write work,
-    # never O(history) (a 10^10-row seen table is only ever appended to)
-    updates = {"frontier": next_frontier}
+    updates = {}
     appends = {
+        "frontier": new_rows,
         "seen": new_seen,
         "counters": counters,
         "fetch_log": fetch_log,
         "documents": documents,
+        deletes_of("frontier"): dequeued.select("url_hash", "enqueue_seq"),
     }
     if bloom is not None:
         updates["bloom"] = PartitionedBloom().merge(bloom, new_seen)
@@ -379,10 +373,12 @@ def run_crawl(
         stats = run_round(fmt, cfg)
         if stats["fetched"] == 0:
             break
-        # fold the seen table's delta list periodically so reads don't
-        # accumulate unbounded file lists (Iceberg rewrite_data_files)
+        # fold the seen and frontier delta lists (and the frontier's
+        # deletes) periodically so reads don't accumulate unbounded file
+        # lists (Iceberg rewrite_data_files)
         if (i + 1) % 16 == 0:
             fmt.compact("seen")
+            fmt.compact("frontier")
             if cfg.expire_keep_last:
                 fmt.expire_snapshots(keep_last=cfg.expire_keep_last)
     return fmt

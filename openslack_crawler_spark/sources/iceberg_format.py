@@ -19,6 +19,14 @@ commit, compact, expire_snapshots, destroy) with equal signatures
 (tests/test_sources_and_bucketing.py asserts the parity). Keyed upserts
 are not part of the seam: the crawl state is replaced or appended to,
 never merged.
+
+Row removal is a delta too: a round appends its dequeued row keys to
+`frontier_deletes` (`table_format.deletes_of`), and `read` anti-joins a
+table with its delete table (`table_format.apply_deletes`), exactly as
+the parquet twin does. Iceberg's native form of the same thing is the v2
+equality delete file (or a position delete), written by the writer and
+applied by the reader; the sibling table keeps this module on plain
+appends, so it works on any Iceberg format version and catalog.
 """
 
 from __future__ import annotations
@@ -27,6 +35,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .table_format import apply_deletes, deletes_of
 
 CATALOG = "crawler"
 
@@ -114,6 +124,14 @@ class IcebergFormat:
 
     # -- read ------------------------------------------------------------------
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame | None:
+        """`table` as of an engine snapshot (default: the current one),
+        with that snapshot's deletes applied."""
+        df = self._scan(table, snapshot_id)
+        if df is None:
+            return None
+        return apply_deletes(df, self._scan(deletes_of(table), snapshot_id))
+
+    def _scan(self, table: str, snapshot_id: int | None) -> DataFrame | None:
         try:
             if snapshot_id is not None:
                 m = self._manifest(snapshot_id)
@@ -138,20 +156,25 @@ class IcebergFormat:
     ) -> int:
         """Advance the engine snapshot. `updates` replace a table's full
         contents (Iceberg overwrite — a new table snapshot, old data
-        retained for time travel); `appends` add data files only
-        (O(delta) commit, the Iceberg fast-append shape). The `rounds`
-        marker row is written LAST and carries every table's Iceberg
-        snapshot id for VERSION AS OF reads."""
+        retained for time travel) and truncate its delete table;
+        `appends` add data files only (O(delta) commit, the Iceberg
+        fast-append shape). The `rounds` marker row is written LAST and
+        carries every table's Iceberg snapshot id for VERSION AS OF
+        reads."""
+        touched = set((updates or {}).keys()) | set((appends or {}).keys())
         for name, df in (updates or {}).items():
             self._ensure(name, df)
             df.writeTo(self._qualified(name)).overwrite(F.lit(True))
+            dels = self._qualified(deletes_of(name))
+            if self.spark.catalog.tableExists(dels):
+                self.spark.sql(f"DELETE FROM {dels}")
+                touched.add(deletes_of(name))
         for name, df in (appends or {}).items():
             self._ensure(name, df)
             df.writeTo(self._qualified(name)).append()
         meta = dict(meta or {})
         cur = self.current_snapshot_id()
         sid = 0 if cur is None else cur + 1
-        touched = set((updates or {}).keys()) | set((appends or {}).keys())
         parent = self.current_manifest() or {"table_snapshots": {}}
         snaps = dict(parent["table_snapshots"])
         for name in touched:
@@ -167,10 +190,14 @@ class IcebergFormat:
         return int(sid)
 
     def compact(self, table: str) -> int:
-        """Iceberg small-file maintenance: rewrite_data_files via the
-        system procedure when the catalog exposes it, else a no-op (the
-        manifest-list growth the parquet twin compacts away is handled
-        by Iceberg metadata natively)."""
+        """Iceberg small-file maintenance: a table with a delete table is
+        rewritten with its deletes applied (an overwrite, which truncates
+        them); otherwise rewrite_data_files via the system procedure when
+        the catalog exposes it, else a no-op (the manifest-list growth
+        the parquet twin compacts away is handled by Iceberg metadata
+        natively)."""
+        if self.spark.catalog.tableExists(self._qualified(deletes_of(table))):
+            return self.commit({table: self.read(table)}, meta=dict(self.meta()))
         try:
             self.spark.sql(
                 f"CALL {CATALOG}.system.rewrite_data_files(table => '{self._qualified(table)}')"

@@ -31,6 +31,23 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def deletes_of(table: str) -> str:
+    """Name of `table`'s delete table: rows of `table` whose values on
+    the delete table's columns match one of its rows are gone."""
+    return f"{table}_deletes"
+
+
+def apply_deletes(df: DataFrame, deletes: DataFrame | None) -> DataFrame:
+    """Equality deletes (the Iceberg v2 model): anti-join `df` with its
+    delete table on the delete table's columns. The join side is a plain
+    file scan, so Spark sizes it by its on-disk bytes and broadcasts it
+    under autoBroadcastJoinThreshold."""
+    if deletes is None:
+        return df
+    return df.join(deletes, deletes.columns, "left_anti")
 
 
 class SnapshotParquetFormat:
@@ -38,8 +55,16 @@ class SnapshotParquetFormat:
 
     Layout:
       root/data/<table>/<snapshot>-<uuid>/part-*.parquet
-      root/manifests/<snapshot_id>.json   (table → list of data dirs, meta)
+      root/manifests/<snapshot_id>.json   (table → list of data dirs,
+                                           table → schema json, meta)
       root/CURRENT                        (the committed snapshot id)
+
+    A table `t` may have a delete table `deletes_of(t)` (`t_deletes`), an
+    ordinary entry written through `appends=`: `read(t)` drops the rows
+    it matches, so removing rows costs a delta, not a rewrite of `t`.
+    Replacing `t` through `updates=` (and so `compact(t)`) drops
+    `t_deletes` from the manifest. Each table's schema is recorded at
+    write time, so a read infers nothing (no footer-scan job).
     """
 
     def __init__(self, root: str, spark: SparkSession):
@@ -70,6 +95,8 @@ class SnapshotParquetFormat:
 
     # -- read ---------------------------------------------------------------
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame | None:
+        """`table` as of a snapshot (default: the current one), with that
+        snapshot's deletes applied."""
         m = (
             self._manifest(snapshot_id)
             if snapshot_id is not None
@@ -77,7 +104,16 @@ class SnapshotParquetFormat:
         )
         if not m or table not in m["tables"]:
             return None
-        return self.spark.read.parquet(*m["tables"][table])
+        return apply_deletes(self._scan(m, table), self._scan(m, deletes_of(table)))
+
+    def _scan(self, m: dict, table: str) -> DataFrame | None:
+        if table not in m["tables"]:
+            return None
+        reader = self.spark.read
+        schema = m.get("schemas", {}).get(table)
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(*m["tables"][table])
 
     # -- write --------------------------------------------------------------
     def commit(
@@ -87,27 +123,33 @@ class SnapshotParquetFormat:
         appends: dict[str, DataFrame] | None = None,
     ) -> int:
         """Advance CURRENT atomically. `updates` replace a table's full
-        contents (one fresh data dir); `appends` add a delta data dir to
-        the table's existing file list — O(delta) work per round, the
-        Iceberg append shape (a 10^10-row seen table must never be
-        rewritten per round). Unchanged tables carry over."""
+        contents (one fresh data dir) and drop its delete table; `appends`
+        add a delta data dir to the table's existing file list — O(delta)
+        work per round, the Iceberg append shape (a 10^10-row seen table
+        must never be rewritten per round). Appending to `t_deletes`
+        removes rows from `t` the same way. Unchanged tables carry over."""
         parent = self.current_manifest() or {"tables": {}, "snapshot_id": -1}
         sid = parent["snapshot_id"] + 1
         tables: dict[str, list[str]] = dict(parent["tables"])
+        schemas: dict[str, dict] = dict(parent.get("schemas", {}))
 
         def _write(name: str, df: DataFrame) -> str:
             path = os.path.join(self.root, "data", name, f"{sid}-{uuid.uuid4().hex[:8]}")
             df.write.mode("overwrite").parquet(path)
+            schemas[name] = df.schema.jsonValue()
             return path
 
         for name, df in (updates or {}).items():
             tables[name] = [_write(name, df)]
+            tables.pop(deletes_of(name), None)
+            schemas.pop(deletes_of(name), None)
         for name, df in (appends or {}).items():
             tables[name] = tables.get(name, []) + [_write(name, df)]
         manifest = {
             "snapshot_id": sid,
             "parent": parent["snapshot_id"],
             "tables": tables,
+            "schemas": schemas,
             "meta": meta or {},
         }
         mpath = os.path.join(self.root, "manifests", f"{sid}.json")
@@ -120,8 +162,9 @@ class SnapshotParquetFormat:
         return sid
 
     def compact(self, table: str) -> int:
-        """Fold a table's delta list back into one data dir (maintenance,
-        run off the critical path — Iceberg rewrite_data_files)."""
+        """Fold a table's delta list and its deletes back into one data
+        dir (maintenance, run off the critical path — Iceberg
+        rewrite_data_files)."""
         cur = self.read(table)
         if cur is None:
             return self.current_snapshot_id() or 0

@@ -54,7 +54,8 @@ def parse_requests(raw: DataFrame, value_col: str = "value") -> DataFrame:
 
 def enqueue_batch(fmt: SnapshotParquetFormat, batch: DataFrame, epoch_id: int) -> None:
     """foreachBatch sink: one micro-batch → one snapshot commit through
-    the standard enqueue operators."""
+    the standard enqueue operators. The commit appends to the frontier
+    and the seen table; it never reads or rewrites the frontier."""
     meta = fmt.meta() or {"round": 0, "next_seq": 0}
     next_seq = int(meta.get("next_seq", 0))
     # arrival order: each request's position in the micro-batch, tagged
@@ -82,12 +83,8 @@ def enqueue_batch(fmt: SnapshotParquetFormat, batch: DataFrame, epoch_id: int) -
     new_rows, n_new = fr.frontier_appends(
         cands, [F.col("appid").asc(), F.col("url").asc()], next_seq
     )
-    frontier = fmt.read("frontier")
     fmt.commit(
-        updates={
-            "frontier": new_rows if frontier is None else frontier.unionByName(new_rows)
-        },
-        appends={"seen": fr.seen_rows(new_rows)},
+        appends={"frontier": new_rows, "seen": fr.seen_rows(new_rows)},
         meta={"round": int(meta.get("round", 0)), "next_seq": next_seq + n_new,
               "epoch": int(epoch_id)},
     )

@@ -34,21 +34,22 @@ def test_components_with_reliable_checkpoint(spark, tmp_path):
     assert any(os.scandir(tmp_path / "ckpt"))
 
 
-def test_crawl_rounds_with_reliable_checkpoint(spark, tmp_path, monkeypatch):
+def test_crawl_rounds_with_reliable_checkpoint(spark, tmp_path):
     seeds = synthetic.gen_seeds(spark, 300, n_hosts=20)
     robots = synthetic.gen_robots(spark, 20)
     cfg = rj.CrawlConfig(n_hosts=20, k_per_host=4, maxdepth=2)
     fmt_a = rj.run_crawl(spark, str(tmp_path / "a"), seeds, robots, cfg, rounds=2)
     stats_a = rj.run_round(fmt_a, cfg)
     spark.conf.set("spark.graft.checkpointDir", str(tmp_path / "ckpt"))
-    # store b also drops dequeued rows by a shuffled anti-join, the plan a
-    # round takes once its batch is too large to broadcast
-    monkeypatch.setattr(rj, "BROADCAST_DEQUEUED_ROWS", 0)
+    # store b also applies the frontier's deletes by a shuffled anti-join,
+    # the plan a read takes once its delete files are too large to broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         fmt_b = rj.run_crawl(spark, str(tmp_path / "b"), seeds, robots, cfg, rounds=2)
         stats_b = rj.run_round(fmt_b, cfg)
     finally:
         spark.conf.unset("spark.graft.checkpointDir")
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     # the round's fetch count is observed on its dequeue cut, which
     # reliable checkpoint() materializes as well as localCheckpoint()
     assert stats_a == stats_b and stats_a["fetched"] > 0

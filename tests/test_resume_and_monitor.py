@@ -38,9 +38,9 @@ class Abort(Exception):
     pass
 
 
-# round 2's commit writes the frontier update plus the seen, counters,
-# fetch_log and documents append deltas
-ROUND2_WRITES = 5
+# round 2's commit writes six append deltas: the frontier's new rows,
+# seen, counters, fetch_log, documents, and the frontier's deletes
+ROUND2_WRITES = 6
 ABORTS = [
     "between_rounds",
     *(f"write_{k}" for k in range(1, ROUND2_WRITES + 1)),
@@ -87,6 +87,20 @@ def test_kill_resume_exactness(spark, tmp_path, monkeypatch, uninterrupted, abor
 @pytest.fixture()
 def crawl_fmt(spark, tmp_path):
     return _run(spark, str(tmp_path / "mon"), 2)
+
+
+def test_round_commit_writes_no_old_frontier_row(spark, crawl_fmt):
+    """O(round) commits: round 2 writes its own new frontier rows (and the
+    dequeued keys as deletes), never a copy of a row already queued
+    before it, whose enqueue_seq is below round 1's next_seq."""
+    r1, r2 = crawl_fmt._manifest(1), crawl_fmt._manifest(2)
+    old_dirs = set(r1["tables"]["frontier"])
+    written = [d for d in r2["tables"]["frontier"] if d not in old_dirs]
+    assert written
+    copied = spark.read.parquet(*written).filter(
+        F.col("enqueue_seq") < r1["meta"]["next_seq"]
+    )
+    assert copied.count() == 0
 
 
 def test_info_aggregates(spark, crawl_fmt):

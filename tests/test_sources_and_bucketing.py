@@ -106,6 +106,63 @@ def test_expire_snapshots_bounds_storage(spark, tmp_path):
     assert fmt.read("log").count() == 50          # deltas all still referenced
 
 
+def test_deletes_table_is_read_time_equality_delete(spark, tmp_path):
+    """`t_deletes` removes rows of `t` by their values on its columns,
+    per snapshot: a delete of (k, seq 1) leaves an appended (k, seq 2),
+    whether it lands in the same commit or a later one. Replacing `t`
+    (updates=, compact) drops the deletes without changing what reads,
+    and expiry keeps every delete dir a kept snapshot references."""
+    import os
+
+    from openslack_crawler_spark.sources.table_format import (
+        SnapshotParquetFormat,
+        deletes_of,
+    )
+
+    fmt = SnapshotParquetFormat(str(tmp_path / "s"), spark)
+    t, d = "t", deletes_of("t")
+
+    def rows(*r):
+        return spark.createDataFrame(list(r), "k long, seq long, v string")
+
+    def keys(*r):
+        return spark.createDataFrame(list(r), "k long, seq long")
+
+    def got(sid=None):
+        return sorted(tuple(r) for r in fmt.read(t, snapshot_id=sid).collect())
+
+    fmt.commit({t: rows((1, 1, "a"), (2, 1, "b"), (3, 1, "c"))})   # sid 0
+    fmt.commit(appends={t: rows((1, 2, "a2")), d: keys((1, 1))})   # sid 1
+    fmt.commit(appends={d: keys((2, 1))})                           # sid 2
+    fmt.commit(appends={t: rows((2, 2, "b2"))})                     # sid 3
+    want = {
+        0: [(1, 1, "a"), (2, 1, "b"), (3, 1, "c")],
+        1: [(1, 2, "a2"), (2, 1, "b"), (3, 1, "c")],
+        2: [(1, 2, "a2"), (3, 1, "c")],
+        3: [(1, 2, "a2"), (2, 2, "b2"), (3, 1, "c")],
+    }
+    assert {sid: got(sid) for sid in want} == want
+    assert got() == want[3]
+    # reads take the schema the manifest recorded, for deletes too
+    assert set(fmt.current_manifest()["schemas"]) == {t, d}
+
+    # sids 2 and 3 stay; sid 1's delete dir is still referenced by both
+    fmt.expire_snapshots(keep_last=2)
+    dirs = fmt.current_manifest()["tables"][d]
+    assert len(dirs) == 2 and all(os.path.isdir(p) for p in dirs)
+    assert got(2) == want[2] and got() == want[3]
+
+    fmt.compact(t)                                                  # sid 4
+    m = fmt.current_manifest()
+    assert d not in m["tables"] and d not in m["schemas"]
+    assert len(m["tables"][t]) == 1 and got() == want[3]
+    fmt.commit(appends={d: keys((3, 1))})                           # sid 5
+    assert got() == want[3][:2]
+    fmt.commit({t: fmt.read(t)})                                    # sid 6
+    assert d not in fmt.current_manifest()["tables"] and got() == want[3][:2]
+    assert got(3) == want[3]
+
+
 def test_bucketed_seen_join_is_shuffle_free(spark, tmp_path):
     """bucketBy(url_hash) on both sides → the anti-join plan has NO
     Exchange (storage-partitioned join; Iceberg bucket(N, url_hash)
