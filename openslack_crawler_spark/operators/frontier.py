@@ -72,6 +72,10 @@ def mark_enqueue_filters(
     the caller keep dropped fingerprints (they still enter the seen set,
     with NULL added_seq) while accepted rows carry their assigned
     enqueue_seq. The blacklist is tiny, so it joins as a broadcast."""
+    # current_timestamp() folds to a literal that Spark inlines into the
+    # generated code, so each round recompiles the 2 classes of this
+    # stage; binding it as data cost more Spark jobs than the recompiles
+    # (measured, see the note above round_job._partition_counts)
     ok = (F.col("depth") <= F.col("maxdepth")) & (
         F.col("expires").isNull() | (F.current_timestamp() < F.col("expires"))
     )

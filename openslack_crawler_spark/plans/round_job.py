@@ -148,6 +148,14 @@ def append_key(retry: int, score, seq, offset):
     )
 
 
+# Per-round values stay literals, measured: Spark inlines primitive
+# literals into generated code, so `F.lit(round_id)` here and in the
+# round's fetch_log and documents projections, and the enqueue filters'
+# `current_timestamp()` (frontier.mark_enqueue_filters), cost 9 whole-
+# stage recompiles per round (~0.1 s): 4 counters aggregates, 2
+# fetch_log, 1 documents, 2 fingerprint-stage classes. Binding them as
+# data through a broadcast VALUES cross join removed those recompiles,
+# but took the round from 22 to 27 Spark jobs with no CPU gain.
 def _partition_counts(df: DataFrame, metric: str, round_id: int) -> DataFrame:
     """Per-partition lineage counters (north_rule) — stats.py:46-55
     rebuilt as a tiny aggregate instead of hincrby round-trips."""
@@ -242,6 +250,8 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
         "doc_id": F.concat(F.lit("doc-"), F.col("url_hash").cast("string")),
     })
 
+    # round_id stays an inlined literal here and in fetch_log (see the
+    # note above _partition_counts)
     documents = fetched.select(
         "doc_id", "url", "url_hash", "crawlid",
         F.lit(round_id).alias("fetched_round"), "spans",

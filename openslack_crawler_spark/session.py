@@ -85,6 +85,16 @@ def get_spark(
         # shuffle volume (~1-2 GB/round), so the default keeps the
         # guide-§2.3 "measure both" verdict on record instead of a
         # speculative flip.
+        # Janino output is kept per generated source in one JVM-wide LRU
+        # (static conf, read at session start). A crawl round asks for
+        # ~117 distinct whole-stage classes, more than the default 100,
+        # so LRU order evicted each class before the next round asked
+        # again and every round recompiled 82-117 of them (0.6-1.1 s).
+        # Per-round literals (round ids, the enqueue timestamp) add a few
+        # new variants per round that churn the cache too; 2000 holds
+        # the round's working set with headroom for them and for the
+        # ingest and query plans sharing the session.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config(
