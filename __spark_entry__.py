@@ -162,12 +162,12 @@ def entry(spark: SparkSession) -> DataFrame:
     )
     # seen = every third URL already crawled
     seen = frontier.filter(F.pmod("enqueue_seq", F.lit(3)) == 0)
-    batch = fr.dequeue_top_k_per_host(
-        seen_filter.filter_unseen(frontier, seen), 8, salted=False
-    )
-    # every host: 1 s crawl delay, 4 fetches per politeness slot
+    batch = fr.dequeue_top_k_per_host(seen_filter.filter_unseen(frontier, seen), 8)
+    # every host: 1 s crawl delay, 4 fetches per politeness slot, no
+    # disallowed prefix
     robots = frontier.select(
-        "host", F.lit(1.0).alias("crawl_delay"), F.lit(4).alias("max_parallel")
+        "host", F.lit(1.0).alias("crawl_delay"), F.lit(4).alias("max_parallel"),
+        F.array().cast("array<string>").alias("disallow"),
     ).distinct()
     return po.assign_fetch_slots(batch, robots).select(
         "url", "host_id", "priority", "fetch_rank", "fetch_at"

@@ -1,5 +1,5 @@
 """Frontier priority-queue semantics: enqueue filters, scoring, per-host
-top-k dequeue, salted skew handling.
+top-k dequeue.
 
 Reference semantics:
 - enqueue pipeline order: dupe → blacklist → expiry → push
@@ -15,12 +15,14 @@ Reference semantics:
 - depth guard (link_spider.py:50-56), expiry (scheduler.py:98-103),
   blacklist (scheduler.py:76-85).
 
-Scale design (SURVEY.md §4 O4): the dequeue shuffles on host_hash; a
-Zipf host distribution makes that skewed, so rows carry a `salt`
-bucket — pmod(url_hash, s) — and heavy window work runs on
-(host_hash, salt) first, then a cheap merge of the s per-salt top-k
-lists picks the global per-host top-k. AQE skew-join stays on as the
-safety net.
+Scale design (SURVEY.md §4 O4): the dequeue shuffles on host_hash, and
+a Zipf host distribution makes that skewed. The per-host
+`row_number() <= k` window gets a partial WindowGroupLimit below its
+shuffle (SPARK-37099): every input partition keeps at most k rows per
+host, so a hot host sends ≤ k rows per partition through the exchange,
+however large it is. Spark only plans that node for k up to
+spark.sql.optimizer.windowGroupLimitThreshold, so a larger k is
+refused. AQE skew-join stays on as the safety net.
 """
 
 from __future__ import annotations
@@ -33,7 +35,8 @@ from . import components, sequence
 
 DEPTH_DECAY = 10  # link_spider.py:81
 RETRY_DECAY = 10  # redis_retry.py:20
-DEFAULT_SALT_BUCKETS = 16
+WINDOW_GROUP_LIMIT_CONF = "spark.sql.optimizer.windowGroupLimitThreshold"
+
 
 def dequeue_order():
     """(score desc, enqueue_seq asc) — the documented pop tiebreak."""
@@ -94,21 +97,16 @@ def mark_enqueue_filters(
     return cands.withColumn("_enqueue_ok", ok)
 
 
-def with_salt(df: DataFrame, buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Hot-host salt bucket: deterministic pmod(url_hash, buckets)."""
-    return df.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(buckets)).cast("int"))
-
-
 def as_frontier_rows(df: DataFrame) -> DataFrame:
-    """Salt, then project to the frontier columns (FRONTIER_SCHEMA)."""
-    return with_salt(df).select(*FRONTIER_SCHEMA.fieldNames())
+    """Project to the frontier columns (FRONTIER_SCHEMA)."""
+    return df.select(*FRONTIER_SCHEMA.fieldNames())
 
 
 def frontier_appends(
     df: DataFrame, order_cols: list, start: int, where: str | None = None
 ) -> tuple[DataFrame, int]:
     """The one path by which rows join the frontier after bootstrap:
-    dense enqueue_seq from `start` in order_cols order, salt, frontier
+    dense enqueue_seq from `start` in order_cols order, frontier
     columns, one lineage cut on the session checkpoint seam. Returns
     (rows, count of rows that took a seq): with `where`, only that
     column's True rows take one, the rest keep a NULL enqueue_seq. The
@@ -130,34 +128,20 @@ def seen_rows(rows: DataFrame) -> DataFrame:
     )
 
 
-def dequeue_top_k_per_host(
-    frontier: DataFrame, k: int, salted: bool = True
-) -> DataFrame:
+def dequeue_top_k_per_host(frontier: DataFrame, k: int) -> DataFrame:
     """Per-host top-k pop (S4/W1): the set-oriented equivalent of N
-    zrange(0,0) pops with a per-host batch budget.
-
-    salted=True runs the rank in two phases: per-(host,salt) local
-    top-k (parallel even for a hot host), then per-host merge of the
-    ≤ DEFAULT_SALT_BUCKETS×k survivors — same result, bounded skew.
-    """
-    if salted and "salt" in frontier.columns:
-        w_local = Window.partitionBy("host_hash", "salt").orderBy(*dequeue_order())
-        local = (
-            frontier.withColumn("_lrn", F.row_number().over(w_local))
-            .filter(F.col("_lrn") <= k)
-            .drop("_lrn")
+    zrange(0,0) pops with a per-host batch budget. One window over
+    host_hash; its partial WindowGroupLimit bounds what a hot host
+    shuffles (see the module docstring). Raises ValueError when k is
+    above the threshold up to which Spark plans that node."""
+    threshold = int(frontier.sparkSession.conf.get(WINDOW_GROUP_LIMIT_CONF))
+    if k > threshold:
+        raise ValueError(
+            f"k_per_host {k} is above {WINDOW_GROUP_LIMIT_CONF}={threshold}: "
+            "the dequeue would shuffle every row of a hot host"
         )
-        src = local
-    else:
-        src = frontier
     w = Window.partitionBy("host_hash").orderBy(*dequeue_order())
     return (
-        src.withColumn("dequeue_rank", F.row_number().over(w))
+        frontier.withColumn("dequeue_rank", F.row_number().over(w))
         .filter(F.col("dequeue_rank") <= k)
     )
-
-
-def pop_global_top1(frontier: DataFrame) -> DataFrame:
-    """Global priority pop (queue.py:98-109) — TakeOrderedAndProject,
-    no full sort."""
-    return frontier.orderBy(*dequeue_order()).limit(1)

@@ -17,8 +17,9 @@ fetch multiset per politeness budget window" checkable.
 
 Robots rules for the whole host space are a small table → broadcast
 join; the disallow-prefix test is a JVM-side `exists()` lambda over the
-prefix array (no Python). It is a mark (robots_mark), so the round
-keeps disallowed rows in its dequeue cut: they leave the frontier too.
+prefix array (no Python). The round's slot assignment joins robots once
+and marks the verdict, so disallowed rows stay in its dequeue cut: they
+leave the frontier too.
 """
 
 from __future__ import annotations
@@ -26,67 +27,62 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.robots import DEFAULT_CRAWL_DELAY, DEFAULT_MAX_PARALLEL
 from ..functions.url import path_of
 from .frontier import dequeue_order
 
-DEFAULT_CRAWL_DELAY = 1.0  # settings2.py:14
-DEFAULT_MAX_PARALLEL = 8  # settings2.py:18
 
-
-def robots_mark(batch: DataFrame, robots: DataFrame) -> DataFrame:
-    """The robots verdict as a mark: adds `_allowed`, True where no
-    disallowed prefix of the row's host starts its path (False, not
-    NULL, when there is no verdict). robots is broadcast (one row per
-    host — tiny next to the frontier)."""
-    r = robots.select(
-        F.col("host").alias("_r_host"), F.col("disallow").alias("_r_disallow")
-    )
-    joined = batch.join(
-        F.broadcast(r), batch["host"] == r["_r_host"], "left"
-    )
+def _allowed(disallow) -> F.Column:
+    """The robots verdict: True where no disallowed prefix of the row's
+    host starts its path (a host without robots rules is allowed), False,
+    not NULL, when there is no verdict."""
     path = path_of(F.col("url"))
-    allowed = F.col("_r_disallow").isNull() | ~F.exists(
-        F.col("_r_disallow"), lambda p: path.startswith(p)
+    allowed = disallow.isNull() | ~F.exists(disallow, lambda p: path.startswith(p))
+    return F.coalesce(allowed, F.lit(False))
+
+
+def _join_robots(batch: DataFrame, robots: DataFrame, **cols: str) -> DataFrame:
+    """Left broadcast join of robots (one row per host — tiny next to the
+    frontier), its columns renamed as the keywords say."""
+    r = robots.select(
+        F.col("host").alias("_r_host"),
+        *(F.col(src).alias(dst) for dst, src in cols.items()),
     )
-    return joined.withColumn("_allowed", F.coalesce(allowed, F.lit(False))).drop(
-        "_r_host", "_r_disallow"
+    return batch.join(F.broadcast(r), batch["host"] == r["_r_host"], "left").drop(
+        "_r_host"
     )
 
 
 def robots_filter(batch: DataFrame, robots: DataFrame) -> DataFrame:
     """Drop URLs whose path starts with a disallowed prefix for their
     host."""
-    return robots_mark(batch, robots).filter("_allowed").drop("_allowed")
+    joined = _join_robots(batch, robots, _r_disallow="disallow")
+    return joined.filter(_allowed(F.col("_r_disallow"))).drop("_r_disallow")
 
 
-def assign_fetch_slots(
-    batch: DataFrame, robots: DataFrame, allowed: str | None = None
-) -> DataFrame:
-    """Token-bucket politeness window: per-host rank → slot → fetch_at.
+def assign_fetch_slots(batch: DataFrame, robots: DataFrame) -> DataFrame:
+    """Robots verdict + token-bucket politeness window, from one robots
+    join: per-host rank → slot → fetch_at.
 
-    fetch_rank : 1-based per-host rank in dequeue order
+    _allowed   : the robots verdict (see _allowed)
+    fetch_rank : 1-based per-host rank, allowed rows first in dequeue
+                 order, then the disallowed ones
     slot       : floor((rank-1) / max_parallel)
     fetch_at   : slot * crawl_delay   (virtual seconds from round start)
-
-    `allowed` names a boolean column (robots_mark's): its True rows take
-    ranks 1..n in dequeue order, the others rank after them.
     """
-    r = robots.select(
-        F.col("host").alias("_r_host"),
-        F.col("crawl_delay").alias("_crawl_delay"),
-        F.col("max_parallel").alias("_max_parallel"),
-    )
-    out = batch.join(F.broadcast(r), batch["host"] == r["_r_host"], "left").drop(
-        "_r_host"
-    )
+    out = _join_robots(
+        batch, robots, _r_disallow="disallow", _crawl_delay="crawl_delay",
+        _max_parallel="max_parallel",
+    ).withColumn("_allowed", _allowed(F.col("_r_disallow")))
     delay = F.coalesce(F.col("_crawl_delay"), F.lit(DEFAULT_CRAWL_DELAY))
     cap = F.coalesce(F.col("_max_parallel"), F.lit(DEFAULT_MAX_PARALLEL))
-    first = [] if allowed is None else [F.col(allowed).desc()]
-    w = Window.partitionBy("host_hash").orderBy(*first, *dequeue_order())
+    w = Window.partitionBy("host_hash").orderBy(
+        F.col("_allowed").desc(), *dequeue_order()
+    )
     out = out.withColumn("fetch_rank", F.row_number().over(w))
     slot = F.floor((F.col("fetch_rank") - 1) / cap)
     return (
         out.withColumn("fetch_slot", slot.cast("int"))
         .withColumn("fetch_at", (slot * delay).cast("double"))
-        .drop("_crawl_delay", "_max_parallel")
+        .drop("_r_disallow", "_crawl_delay", "_max_parallel")
     )

@@ -2,8 +2,8 @@
 
 One crawl round is ONE pipeline committed as ONE snapshot:
 
-  frontier dequeue (per-host top-k, salted)            [S4/W1, O4]
-   → robots mark + politeness slots on allowed rows     [W2]
+  frontier dequeue (per-host top-k, one window)        [S4/W1, O4]
+   → one robots join: verdict + politeness slots        [W2]
    ── cut A: the dequeued rows (fetch count observed on its job)
    → simulated fetch → documents with interleaved spans [P5]
    → link extraction + predicates                       [P1/P2, F6-F8]
@@ -92,10 +92,6 @@ class CrawlConfig:
     # (redis_retry.py:9-22) until retry_max (RETRY_TIMES settings.py:166)
     failure_mod: int = 0
     retry_max: int = 3
-    # snapshot retention: expire snapshots (keep this many) on the same
-    # 16-round maintenance cadence as compaction; None = keep all
-    # (storage then grows O(history) — set this for long crawls)
-    expire_keep_last: int | None = None
 
 
 def spans_expr(url_col, n_hosts: int):
@@ -215,16 +211,15 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     blacklist = fmt.read("blacklist")
     bloom = fmt.read("bloom") if cfg.use_bloom else None
 
-    # 1-2. dequeue per-host top-k (salted two-phase rank), robots mark,
-    # politeness slots over the allowed rows, then cut A with its fetch
-    # count observed on its job. Popped rows leave the frontier even when
-    # robots disallows them (consumed, not requeued: scrapy
-    # RobotsTxtMiddleware semantics, settings.py:138), so step 9 deletes
-    # the whole cut from the frontier and the fetch reads its allowed rows
-    popped = fr.dequeue_top_k_per_host(frontier, cfg.k_per_host, salted=True)
-    marked = po.assign_fetch_slots(
-        po.robots_mark(popped, robots), robots, allowed="_allowed"
-    )
+    # 1-2. dequeue per-host top-k (one window), the robots verdict and
+    # politeness slots over the allowed rows from one robots join, then
+    # cut A with its fetch count observed on its job. Popped rows leave
+    # the frontier even when robots disallows them (consumed, not
+    # requeued: scrapy RobotsTxtMiddleware semantics, settings.py:138), so
+    # step 9 deletes the whole cut from the frontier and the fetch reads
+    # its allowed rows
+    popped = fr.dequeue_top_k_per_host(frontier, cfg.k_per_host)
+    marked = po.assign_fetch_slots(popped, robots)
     observed = Observation("dequeued")
     dequeued = ckpt_auto(
         marked.observe(observed, F.count_if(F.col("_allowed")).alias("allowed"))
@@ -234,18 +229,16 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
 
     # 3. simulated fetch → spans. Failed attempts (ST6) consumed their
     # politeness slot but yield no document and no expansion; they
-    # re-enqueue in step 8 with decayed priority.
+    # re-enqueue in step 8 with decayed priority. failure_mod 0 folds to a
+    # False literal, and Catalyst prunes the empty retry branch.
     if cfg.failure_mod:
         pid = synthetic.page_id_of(F.col("url"))
         fail_cond = (
             F.pmod(pid + F.col("retry_times") * 7919, F.lit(cfg.failure_mod)) == 3
         )
-        failed = batch.filter(fail_cond)
-        ok = batch.filter(~fail_cond)
     else:
-        failed = None
-        ok = batch
-    fetched = ok.withColumns({
+        fail_cond = F.lit(False)
+    fetched = batch.filter(~fail_cond).withColumns({
         "spans": spans_expr(F.col("url"), cfg.n_hosts),
         "doc_id": F.concat(F.lit("doc-"), F.col("url_hash").cast("string")),
     })
@@ -311,18 +304,14 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # parity oracle applies the same rule). Only _enqueue_ok rows take a
     # seq; dropped children ride along to the seen table through cuts B
     # (the range cut) and C (the appends cut)
-    carried = [
-        c for c in FRONTIER_SCHEMA.fieldNames() if c not in ("enqueue_seq", "salt")
-    ]
-    joining = flagged.select(*carried, child_key.alias("_key"), "_enqueue_ok")
-    if failed is not None:
-        retries = fr.decay_for_retry(
-            failed.filter(F.col("retry_times") < cfg.retry_max)
-        ).withColumn("_enqueue_ok", F.lit(True))
-        retry_key = append_key(1, F.col("score"), F.col("enqueue_seq"), F.lit(0))
-        joining = joining.unionByName(
-            retries.select(*carried, retry_key.alias("_key"), "_enqueue_ok")
-        )
+    carried = [c for c in FRONTIER_SCHEMA.fieldNames() if c != "enqueue_seq"]
+    retries = fr.decay_for_retry(
+        batch.filter(fail_cond & (F.col("retry_times") < cfg.retry_max))
+    ).withColumn("_enqueue_ok", F.lit(True))
+    retry_key = append_key(1, F.col("score"), F.col("enqueue_seq"), F.lit(0))
+    joining = flagged.select(
+        *carried, child_key.alias("_key"), "_enqueue_ok"
+    ).unionByName(retries.select(*carried, retry_key.alias("_key"), "_enqueue_ok"))
     appended, n_enqueued = fr.frontier_appends(
         joining, [F.col("_key").asc()], next_seq, where="_enqueue_ok"
     )
@@ -389,8 +378,6 @@ def run_crawl(
         if (i + 1) % 16 == 0:
             fmt.compact("seen")
             fmt.compact("frontier")
-            if cfg.expire_keep_last:
-                fmt.expire_snapshots(keep_last=cfg.expire_keep_last)
     return fmt
 
 

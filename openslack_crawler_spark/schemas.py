@@ -31,7 +31,6 @@ FRONTIER_SCHEMA = T.StructType(
         T.StructField("expires", T.TimestampType(), True),  # null = never
         T.StructField("dont_filter", T.BooleanType(), False),
         T.StructField("enqueue_seq", T.LongType(), False),
-        T.StructField("salt", T.IntegerType(), True),
         T.StructField("attrs", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )

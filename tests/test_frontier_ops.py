@@ -33,40 +33,9 @@ def test_top_k_per_host_and_tiebreak(spark):
         ("d", 4, "h2", 20, 10, 10.0, 4, 0, False),
     ]
     df = _frontier(spark, rows)
-    got = fr.dequeue_top_k_per_host(df, 2, salted=False)
+    got = fr.dequeue_top_k_per_host(df, 2)
     ranks = {(r.url, r.dequeue_rank) for r in got.collect()}
     assert ranks == {("c", 1), ("b", 2), ("d", 1)}
-
-
-def test_salted_dequeue_equals_unsalted(spark):
-    df = (
-        spark.range(2000)
-        .select(
-            F.col("id").alias("enqueue_seq"),
-            F.concat(F.lit("u"), F.col("id")).alias("url"),
-            F.xxhash64("id").alias("url_hash"),
-            F.concat(F.lit("h"), F.pmod("id", F.lit(3))).alias("host"),
-            F.pmod("id", F.lit(3)).alias("host_hash"),
-            F.pmod(F.xxhash64("id", F.lit(1)), F.lit(100)).cast("int").alias("priority"),
-        )
-        .withColumn("score", F.col("priority").cast("double"))
-        .withColumn("retry_times", F.lit(0))
-        .withColumn("dont_filter", F.lit(False))
-    )
-    salted = fr.with_salt(df, 8)
-    a = {r.url for r in fr.dequeue_top_k_per_host(salted, 5, salted=True).collect()}
-    b = {r.url for r in fr.dequeue_top_k_per_host(df, 5, salted=False).collect()}
-    assert a == b
-
-
-def test_global_pop_top1(spark):
-    rows = [
-        ("a", 1, "h1", 10, 50, 50.0, 3, 0, False),
-        ("b", 2, "h1", 10, 90, 90.0, 5, 0, False),
-        ("c", 3, "h2", 20, 90, 90.0, 9, 0, False),
-    ]
-    got = fr.pop_global_top1(_frontier(spark, rows)).collect()
-    assert [r.url for r in got] == ["b"]
 
 
 def test_politeness_slots(spark):
@@ -114,20 +83,23 @@ def test_dense_seq_where_sequences_flagged_rows_only(spark):
 
 
 def test_politeness_slots_rank_allowed_rows_only(spark):
-    # u1 and u3 are disallowed: the others take ranks 1-3 in pop order,
+    # robots disallows u1 and u3: the others take ranks 1-3 in pop order,
     # so their slots fill as if u1 and u3 were not there
-    rows = [(f"u{i}", i, "h1", 10, 100 - i, float(100 - i), i, 0, False) for i in range(5)]
-    df = _frontier(spark, rows).withColumn("ok", ~F.col("url").isin("u1", "u3"))
+    rows = [
+        (f"http://h1/u{i}", i, "h1", 10, 100 - i, float(100 - i), i, 0, False)
+        for i in range(5)
+    ]
     robots = spark.createDataFrame(
-        [("h1", 1.5, 2, [])], "host string, crawl_delay double, max_parallel int, disallow array<string>"
+        [("h1", 1.5, 2, ["/u1", "/u3"])],
+        "host string, crawl_delay double, max_parallel int, disallow array<string>",
     )
     got = {
-        r.url: (r.fetch_rank, r.fetch_at)
-        for r in assign_fetch_slots(df, robots, allowed="ok").collect()
+        r.url.rsplit("/", 1)[1]: (r._allowed, r.fetch_rank, r.fetch_at)
+        for r in assign_fetch_slots(_frontier(spark, rows), robots).collect()
     }
     assert got == {
-        "u0": (1, 0.0), "u2": (2, 0.0), "u4": (3, 1.5),
-        "u1": (4, 1.5), "u3": (5, 3.0),
+        "u0": (True, 1, 0.0), "u2": (True, 2, 0.0), "u4": (True, 3, 1.5),
+        "u1": (False, 4, 1.5), "u3": (False, 5, 3.0),
     }
 
 
