@@ -15,8 +15,9 @@ Reference semantics:
 
 Spark rebuild: documents already carry spans (input_hint shape); link
 spans ARE the anchors, in document order via `offset`. Extraction =
-posexplode + column predicates — fully JVM-side, no HTML parse needed
-for the synthetic graph. (For raw-HTML sources, functions/html.py
+array filters inside the page's row, one explode, then column
+predicates — fully JVM-side, no shuffle and no HTML parse needed for
+the synthetic graph. (For raw-HTML sources, functions/html.py
 provides the pandas-UDF extractor with the same output shape.)
 """
 
@@ -30,39 +31,31 @@ from .frontier import child_priority, score_expr
 
 
 def extract_link_spans(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, spans, …) → one row per link span, in document
-    order: (doc_id, link_url, anchor_offset [, parent cols])."""
+    """documents(doc_id, spans, …) → one row per link url of a page:
+    (doc_id, link_url, anchor_offset [, parent cols]). unique_list
+    semantics (lxmlhtml.py:67-68), inside the page's row: a link span is
+    kept when no link span with the same url (NULL equal to NULL) has a
+    lower offset. Offsets order a page, not array positions."""
     other = [c for c in documents.columns if c != "spans"]
-    return (
-        documents.select(
-            *other, F.explode(F.col("spans")).alias("span")
-        )
-        .filter(F.col("span.kind") == "link")
-        .select(
-            *other,
-            F.col("span.text").alias("link_url"),
-            F.col("span.offset").alias("anchor_offset"),
-        )
+
+    def is_link(s):
+        return s["kind"] == "link"
+
+    # the inner scan reads `spans` itself: an array expression in its
+    # place would be rebuilt once per outer element
+    firsts = F.filter(
+        F.filter("spans", is_link),
+        lambda s: ~F.exists(
+            "spans",
+            lambda t: is_link(t)
+            & t["text"].eqNullSafe(s["text"])
+            & (t["offset"] < s["offset"]),
+        ),
     )
-
-
-def first_per_page(links: DataFrame) -> DataFrame:
-    """unique_list semantics (lxmlhtml.py:67-68): keep the first
-    occurrence of each url within a page, deterministically by offset."""
-    return (
-        links.groupBy("doc_id", "link_url")
-        .agg(
-            F.min("anchor_offset").alias("anchor_offset"),
-            *[
-                # min_by ties carried columns to the first occurrence by
-                # offset — F.first() without ordering is pick-any and
-                # becomes a parity flake if a non-constant column (e.g.
-                # anchor text) is ever carried
-                F.min_by(c, F.col("anchor_offset")).alias(c)
-                for c in links.columns
-                if c not in ("doc_id", "link_url", "anchor_offset")
-            ],
-        )
+    return documents.select(*other, F.explode(firsts).alias("span")).select(
+        *other,
+        F.col("span.text").alias("link_url"),
+        F.col("span.offset").alias("anchor_offset"),
     )
 
 

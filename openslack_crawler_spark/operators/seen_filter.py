@@ -4,8 +4,10 @@ bloom prefilter.
 Reference semantics (the correctness contract):
 - check-and-insert, first writer wins: Redis SADD returns 0 on the
   second add (/root/reference/crawler/schedulers/redis/dupefilter.py:39-44).
-- `dont_filter` bypasses dedup (/root/reference/crawler/schedulers/
-  redis/scheduler.py:73).
+- `dont_filter` requests skip the dupefilter (/root/reference/crawler/
+  schedulers/redis/scheduler.py:73). The only such requests are retries,
+  and the round joins them after it (round_job step 8), so no row this
+  module sees carries the flag set.
 - bloom filter: md5-hex, 7 SimpleHash fns over 2^31 bits, sharded into
   256MB blocks by hash prefix (/root/reference/crawler/utils/
   bloomfilter.py:12-62).
@@ -40,31 +42,9 @@ DEFAULT_BITS_PER_BLOCK = 1 << 24  # 2 MiB/block in tests; 2^33 (1 GiB) at 10^10
 NUM_HASHES = 7  # parity with bloomfilter.py:36 (7 SimpleHash seeds)
 
 
-def _bypass_flagged(cands: DataFrame, subject_fn) -> DataFrame:
-    """Run a dedup step over the rows it applies to: `dont_filter` rows
-    bypass it (scheduler.py:73) and are unioned back unchanged.
-
-    The subject branch re-attaches `dont_filter` as lit(False) — true
-    by construction for every subject row, and it lets Catalyst PRUNE
-    the filter/union split that a later dedup step builds on top (with
-    the flag buried in the first-wins agg struct, the optimizer could
-    not prove the flagged branch empty and duplicated the entire
-    aggregate subtree — two extra Exchanges of the full batch in the
-    round-5 scheduling-round plan)."""
-    if "dont_filter" not in cands.columns:
-        return subject_fn(cands)
-    kept = (
-        subject_fn(cands.filter(~F.col("dont_filter")).drop("dont_filter"))
-        .withColumn("dont_filter", F.lit(False))
-        .select(*cands.columns)
-    )
-    return kept.unionByName(cands.filter(F.col("dont_filter")))
-
-
 def first_wins_dedup(cands: DataFrame, order="enqueue_seq") -> DataFrame:
     """Intra-batch dedup keeping the FIRST enqueued duplicate — the
     set-oriented equivalent of sequential SADD (dupefilter.py:39-44).
-    Rows with dont_filter=True bypass (scheduler.py:73).
 
     `order` is the first-wins key, a column name or a Column, as in
     F.min_by: the row with the smallest key per url_hash is kept. A
@@ -93,28 +73,22 @@ def first_wins_dedup(cands: DataFrame, order="enqueue_seq") -> DataFrame:
     so the downstream seen anti-join reuses the partitioning with no
     further Exchange."""
     key = F.col(order) if isinstance(order, str) else order
-
-    def dedup(subject: DataFrame) -> DataFrame:
-        others = [c for c in subject.columns if c != "url_hash"]
-        return (
-            subject.repartition(F.col("url_hash"))
-            .groupBy("url_hash")
-            .agg(F.min_by(F.struct(*others), key).alias("_r"))
-            .select(
-                *[F.col("url_hash") if c == "url_hash" else F.col(f"_r.{c}").alias(c)
-                  for c in subject.columns]
-            )
+    others = [c for c in cands.columns if c != "url_hash"]
+    return (
+        cands.repartition(F.col("url_hash"))
+        .groupBy("url_hash")
+        .agg(F.min_by(F.struct(*others), key).alias("_r"))
+        .select(
+            *[F.col("url_hash") if c == "url_hash" else F.col(f"_r.{c}").alias(c)
+              for c in cands.columns]
         )
-
-    return _bypass_flagged(cands, dedup)
+    )
 
 
 def filter_unseen(cands: DataFrame, seen: DataFrame) -> DataFrame:
     """Exact dedup: candidates whose url_hash is NOT in the seen table.
-    dont_filter rows bypass. Catalyst/AQE picks SMJ vs broadcast."""
-    return _bypass_flagged(
-        cands, lambda subject: subject.join(seen.select("url_hash"), "url_hash", "left_anti")
-    )
+    Catalyst/AQE picks SMJ vs broadcast."""
+    return cands.join(seen.select("url_hash"), "url_hash", "left_anti")
 
 
 # --------------------------------------------------------------------------
@@ -260,13 +234,9 @@ class PartitionedBloom:
         """bloom prefilter → exact anti-join only for possible positives.
         Semantically identical to filter_unseen (bloom has no false
         negatives); the definite-negative fast path skips the shuffle."""
-
-        def unseen(subject: DataFrame) -> DataFrame:
-            probed = self.probe(subject, blocks)
-            fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            suspect = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-            return fresh.unionByName(
-                suspect.join(seen.select("url_hash"), "url_hash", "left_anti")
-            )
-
-        return _bypass_flagged(cands, unseen)
+        probed = self.probe(cands, blocks)
+        fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
+        suspect = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+        return fresh.unionByName(
+            suspect.join(seen.select("url_hash"), "url_hash", "left_anti")
+        )

@@ -5,8 +5,9 @@ rebuild's documented tiebreak for Redis zset pop order — SURVEY.md §7
 step 4). A naive global `row_number()` is a single-partition sort; this
 helper is the scalable two-phase form:
 
-1. range-partition + local sort by the order columns (balanced),
-2. local row_number per physical partition,
+1. range-partition by the order columns (balanced),
+2. sort each partition where it lies and rank its rows by their index
+   in it (no second shuffle),
 3. add the exclusive prefix-sum of per-partition counts, observed on
    the range cut's own job and given back as a literal array by
    partition id.
@@ -18,7 +19,7 @@ from __future__ import annotations
 
 from itertools import accumulate
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from . import components
@@ -60,12 +61,19 @@ def with_dense_seq(
     ranged = components.ckpt_auto(ranged)
     # offsets[p] = start + the rows that take a seq in partitions < p
     offsets = list(accumulate(counts.get.values(), initial=start))
-    # rows that take a seq sort first, so their row numbers run 1..count
+    # rows that take a seq sort first, so their local ranks run 0..count-1.
+    # The rank is the row's index in its partition: the low 33 bits of
+    # monotonically_increasing_id, whose upper 31 are the partition id.
+    # It holds because (a) the projection sits directly on the cut, in
+    # the cut's own stage, so the task's partition index equals _pid;
+    # (b) the id is nondeterministic, so EliminateSorts cannot drop the
+    # local sort under a later orderBy; (c) a partition holds at most
+    # 2^33 rows
     first = [] if where is None else [take.desc()]
-    w = Window.partitionBy("_pid").orderBy(*first, *order_cols)
+    lrn = F.monotonically_increasing_id() - F.shiftleft(F.col("_pid").cast("long"), 33)
     off = F.array(*map(F.lit, offsets)).cast("array<bigint>")[F.col("_pid")]
     return (
-        ranged.withColumn("_lrn", F.row_number().over(w))
-        .withColumn(col_name, F.when(take, off + F.col("_lrn") - 1))
-        .drop("_pid", "_lrn")
+        ranged.sortWithinPartitions(*first, *order_cols)
+        .withColumn(col_name, F.when(take, off + lrn))
+        .drop("_pid")
     ), offsets[-1] - start

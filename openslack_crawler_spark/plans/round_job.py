@@ -6,13 +6,15 @@ One crawl round is ONE pipeline committed as ONE snapshot:
    → one robots join: verdict + politeness slots        [W2]
    ── cut A: the dequeued rows (fetch count observed on its job)
    → simulated fetch → documents with interleaved spans [P5]
-   → link extraction + predicates                       [P1/P2, F6-F8]
+   → link extraction, deduped inside each page's row    [P1/C20]
+   → link predicates                                    [P2, F6-F8]
    → candidate build (depth+1, priority-10)             [W4]
    → intra-round first-wins dedup                       [F1]
    → seen anti-join (exact; bloom prefilter optional)   [J1/F3]
    → enqueue filters (expiry, blacklist) as a mark      [F4/F5]
    → dense enqueue_seq over children + retries, one pass  [§7 step 4]
-   ── cut B: its range cut; cut C: the appends (incl. dropped children)
+   ── cut B: its range cut; cut C: the appends (incl. dropped children),
+      ranked inside cut B's partitions, so cut C shuffles nothing
    → frontier append + delete delta, seen/counters/fetch_log/documents
      appends, in one commit                              [S5, A1]
 
@@ -48,7 +50,6 @@ from ..operators import politeness as po
 from ..operators.linkextract import (
     apply_link_predicates,
     extract_link_spans,
-    first_per_page,
     links_to_candidates,
 )
 from ..operators.components import ckpt_auto
@@ -268,7 +269,7 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
         "spans",
     )
     links = apply_link_predicates(
-        first_per_page(extract_link_spans(expandable)),
+        extract_link_spans(expandable),
         allowed_domains=cfg.allowed_domains,
         allow_regex=cfg.allow_regex,
         deny_regex=cfg.deny_regex,
@@ -301,7 +302,8 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # the flagged children and the retry re-enqueues (ST6/W3): failed
     # fetches with budget left go back with priority-10, retry_times+1,
     # dont_filter=True, sequenced AFTER the children in pop order (the
-    # parity oracle applies the same rule). Only _enqueue_ok rows take a
+    # parity oracle applies the same rule). Joining here, after step 6,
+    # is how they skip the dupefilter (scheduler.py:73). Only _enqueue_ok rows take a
     # seq; dropped children ride along to the seen table through cuts B
     # (the range cut) and C (the appends cut)
     carried = [c for c in FRONTIER_SCHEMA.fieldNames() if c != "enqueue_seq"]

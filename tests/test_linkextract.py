@@ -8,7 +8,6 @@ import pytest
 from openslack_crawler_spark.operators.linkextract import (
     apply_link_predicates,
     extract_link_spans,
-    first_per_page,
 )
 
 LINKS = [
@@ -23,16 +22,44 @@ LINKS = [
 ]
 
 
+# a second page for unique_list's edge cases: a url whose lower offset
+# sits later in the array, two NULL-text links (NULL equals NULL), and a
+# text span that repeats a link's url at a lower offset (only links count)
+EDGE_SPANS = [
+    ("text", "http://x.org/b", "", 1),
+    ("link", "http://x.org/a", "", 9),
+    ("link", "http://x.org/b", "", 4),
+    ("link", "http://x.org/a", "", 2),
+    ("link", None, "", 6),
+    ("link", None, "", 5),
+]
+
+
 @pytest.fixture(scope="module")
-def links(spark):
+def extracted(spark):
     spans = [("text", "intro", "", 0)] + [
         ("link", u, "", i + 1) for i, u in enumerate(LINKS)
     ] + [("image", "", "img-1", len(LINKS) + 1)]
-    doc = spark.createDataFrame(
-        [("doc-1", spans)],
+    docs = spark.createDataFrame(
+        [("doc-1", spans), ("doc-2", EDGE_SPANS)],
         "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    return first_per_page(extract_link_spans(doc)).cache()
+    return extract_link_spans(docs).cache()
+
+
+@pytest.fixture(scope="module")
+def links(extracted):
+    return extracted.filter("doc_id = 'doc-1'")
+
+
+def test_unique_list_keeps_lowest_offset_per_url(extracted):
+    got = [(r.doc_id, r.link_url, r.anchor_offset) for r in extracted.collect()]
+    want = [("doc-1", u, i + 1) for i, u in enumerate(LINKS[:-1])] + [
+        ("doc-2", "http://x.org/a", 2),
+        ("doc-2", "http://x.org/b", 4),
+        ("doc-2", None, 5),
+    ]
+    assert sorted(got, key=repr) == sorted(want, key=repr)
 
 
 def test_no_filter_keeps_unique_links(links):

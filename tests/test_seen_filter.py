@@ -71,14 +71,6 @@ def test_first_wins_minby_matches_window_shape(spark):
     assert got == want
 
 
-def test_dont_filter_bypass(spark):
-    # scheduler.py:73 / offline.py: dont_filter requests skip dedup
-    c = _cands(spark, [(1, 1, False), (1, 2, True), (1, 3, True)])
-    assert first_wins_dedup(c).count() == 3
-    seen = spark.createDataFrame([(1,)], "url_hash long")
-    assert filter_unseen(c, seen).count() == 2  # only the flagged two survive
-
-
 def test_exact_anti_join(spark):
     c = _cands(spark, [(1, 1, False), (2, 2, False), (3, 3, False)])
     seen = spark.createDataFrame([(2,), (99,)], "url_hash long")

@@ -126,3 +126,37 @@ def test_round_dequeue_cut_shuffles_once_and_joins_robots_once(
         d for name, d in nodes if name.strip() == "BroadcastExchange" and "_r_host" in d
     ]
     assert len(robots_broadcasts) == 1, robots_broadcasts
+
+
+def test_round_regroups_no_rows_that_are_already_together(
+    spark, tmp_path, monkeypatch
+):
+    """A page's links dedup inside its row, so the range cut (cut B)
+    shuffles nothing on doc_id; the sequencing ranks each range partition
+    where it lies, so the appends cut (cut C) has no Exchange at all."""
+    from openslack_crawler_spark.schemas import FRONTIER_SCHEMA
+
+    hosts = 50
+    seeds = synthetic.gen_seeds(spark, 3000, n_hosts=hosts)
+    robots = synthetic.gen_robots(spark, hosts)
+    cfg = rj.CrawlConfig(n_hosts=hosts, k_per_host=8, maxdepth=1)
+    cuts = {}
+    ckpt = components._ckpt
+
+    def captured(df, checkpoint_dir, eager=True):
+        if "_pid" in df.columns:
+            cuts["range"] = _plan_nodes(df)
+        elif df.columns == FRONTIER_SCHEMA.fieldNames():
+            cuts["appends"] = _plan_nodes(df)
+        return ckpt(df, checkpoint_dir, eager)
+
+    monkeypatch.setattr(components, "_ckpt", captured)
+    rj.run_crawl(spark, str(tmp_path), seeds, robots, cfg, rounds=1)
+    # the range cut's plan holds the link extraction
+    assert any(name.strip() == "Generate" for name, _ in cuts["range"])
+    doc_id_exchanges = [
+        d for name, d in cuts["range"]
+        if name.strip() == "Exchange" and re.search(r"hashpartitioning\([^)]*doc_id", d)
+    ]
+    assert doc_id_exchanges == []
+    assert [n for n, _ in cuts["appends"] if "Exchange" in n] == []
