@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schemas import FRONTIER_SCHEMA
-from . import components, sequence
+from . import sequence
 
 DEPTH_DECAY = 10  # link_spider.py:81
 RETRY_DECAY = 10  # redis_retry.py:20
@@ -107,15 +107,15 @@ def frontier_appends(
 ) -> tuple[DataFrame, int]:
     """The one path by which rows join the frontier after bootstrap:
     dense enqueue_seq from `start` in order_cols order, frontier
-    columns, one lineage cut on the session checkpoint seam. Returns
-    (rows, count of rows that took a seq): with `where`, only that
-    column's True rows take one, the rest keep a NULL enqueue_seq. The
-    sequencing and the cut are looked up on their modules at call time,
-    so wrappers installed there see them."""
+    columns. Returns (rows, count of rows that took a seq): with
+    `where`, only that column's True rows take one, the rest keep a NULL
+    enqueue_seq. No cut of their own: each consumer re-reads the eager
+    range cut, whose local sort key is row-unique, so every read ranks
+    alike. with_dense_seq is looked up at call time, for wrappers."""
     rows, n = sequence.with_dense_seq(
         df, order_cols, start=start, col_name="enqueue_seq", where=where
     )
-    return components.ckpt_auto(as_frontier_rows(rows)), n
+    return as_frontier_rows(rows), n
 
 
 def seen_rows(rows: DataFrame) -> DataFrame:

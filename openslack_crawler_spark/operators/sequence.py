@@ -64,11 +64,11 @@ def with_dense_seq(
     # rows that take a seq sort first, so their local ranks run 0..count-1.
     # The rank is the row's index in its partition: the low 33 bits of
     # monotonically_increasing_id, whose upper 31 are the partition id.
-    # It holds because (a) the projection sits directly on the cut, in
-    # the cut's own stage, so the task's partition index equals _pid;
-    # (b) the id is nondeterministic, so EliminateSorts cannot drop the
-    # local sort under a later orderBy; (c) a partition holds at most
-    # 2^33 rows
+    # It holds because (a) each consumer evaluates the projection in the
+    # stage that reads the cut (no Exchange in between), so the task's
+    # partition index equals _pid; (b) the id is nondeterministic, so
+    # EliminateSorts cannot drop the local sort under a later orderBy;
+    # (c) a partition holds at most 2^33 rows
     first = [] if where is None else [take.desc()]
     lrn = F.monotonically_increasing_id() - F.shiftleft(F.col("_pid").cast("long"), 33)
     off = F.array(*map(F.lit, offsets)).cast("array<bigint>")[F.col("_pid")]

@@ -13,8 +13,8 @@ One crawl round is ONE pipeline committed as ONE snapshot:
    → seen anti-join (exact; bloom prefilter optional)   [J1/F3]
    → enqueue filters (expiry, blacklist) as a mark      [F4/F5]
    → dense enqueue_seq over children + retries, one pass  [§7 step 4]
-   ── cut B: its range cut; cut C: the appends (incl. dropped children),
-      ranked inside cut B's partitions, so cut C shuffles nothing
+   ── cut B: its range cut; the appends (incl. dropped children) are
+      ranked inside cut B's partitions, and each write re-reads cut B
    → frontier append + delete delta, seen/counters/fetch_log/documents
      appends, in one commit                              [S5, A1]
 
@@ -40,6 +40,7 @@ mapInPandas) would plug in.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -148,23 +149,23 @@ def append_key(retry: int, score, seq, offset):
 # Per-round values stay literals, measured: Spark inlines primitive
 # literals into generated code, so `F.lit(round_id)` here and in the
 # round's fetch_log and documents projections, and the enqueue filters'
-# `current_timestamp()` (frontier.mark_enqueue_filters), cost 9 whole-
-# stage recompiles per round (~0.1 s): 4 counters aggregates, 2
-# fetch_log, 1 documents, 2 fingerprint-stage classes. Binding them as
-# data through a broadcast VALUES cross join removed those recompiles,
-# but took the round from 22 to 27 Spark jobs with no CPU gain.
-def _partition_counts(df: DataFrame, metric: str, round_id: int) -> DataFrame:
-    """Per-partition lineage counters (north_rule) — stats.py:46-55
-    rebuilt as a tiny aggregate instead of hincrby round-trips."""
+# `current_timestamp()` (frontier.mark_enqueue_filters), cost 7 whole-
+# stage recompiles per round (~0.1 s): 2 counters, 2 fetch_log, 1
+# documents, 2 fingerprint-stage classes. Binding them as data through a
+# broadcast VALUES cross join removed those recompiles, but took the
+# round from 22 to 27 Spark jobs with no CPU gain.
+def _partition_counts(inputs: dict[str, DataFrame], round_id: int) -> DataFrame:
+    """Per-partition lineage counters (north_rule, stats.py:46-55) in one
+    aggregate: each input, keyed by metric, tags its own partition ids."""
+    tagged = [
+        df.select(F.spark_partition_id().alias("partition_id"), F.lit(m).alias("metric"))
+        for m, df in inputs.items()
+    ]
     return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("value"))
-        .select(
-            F.lit(round_id).alias("round_id"),
-            F.col("partition_id"),
-            F.lit(metric).alias("metric"),
-            F.col("value").cast("long"),
-        )
+        reduce(DataFrame.unionByName, tagged)
+        .groupBy("partition_id", "metric")
+        .agg(F.count(F.lit(1)).cast("long").alias("value"))
+        .select(F.lit(round_id).alias("round_id"), "partition_id", "metric", "value")
     )
 
 
@@ -304,8 +305,8 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # dont_filter=True, sequenced AFTER the children in pop order (the
     # parity oracle applies the same rule). Joining here, after step 6,
     # is how they skip the dupefilter (scheduler.py:73). Only _enqueue_ok rows take a
-    # seq; dropped children ride along to the seen table through cuts B
-    # (the range cut) and C (the appends cut)
+    # seq; dropped children ride along to the seen table through cut B
+    # (the range cut), which every write of step 9 re-reads
     carried = [c for c in FRONTIER_SCHEMA.fieldNames() if c != "enqueue_seq"]
     retries = fr.decay_for_retry(
         batch.filter(fail_cond & (F.col("retry_times") < cfg.retry_max))
@@ -323,14 +324,15 @@ def run_round(fmt: SnapshotParquetFormat, cfg: CrawlConfig) -> dict:
     # orders fingerprint-TTL expiry); retries (dont_filter) never enter
     new_seen = fr.seen_rows(appended)
 
-    # 9. frontier delta + seen append + counters, one atomic commit. Every
+    # 9. frontier delta + seen append + counters (one aggregate), one
+    # atomic commit; each write re-ranks the appends off cut B. Every
     # write is an append — O(round) write work, never O(frontier) or
     # O(history). The dequeued rows leave the frontier as equality deletes
     # (the zremrangebyrank half of the atomic pop, queue.py:98-109), keyed
     # on the row identity: a failed fetch re-enters in this same commit
     # with its url_hash and a new enqueue_seq, and must survive the delete
-    counters = _partition_counts(batch, "scheduler/dequeued", round_id).unionByName(
-        _partition_counts(new_rows, "scheduler/enqueued", round_id)
+    counters = _partition_counts(
+        {"scheduler/dequeued": batch, "scheduler/enqueued": new_rows}, round_id
     )
     updates = {}
     appends = {

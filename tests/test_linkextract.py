@@ -98,3 +98,35 @@ def test_combined(links):
 def test_first_occurrence_offset(links):
     r = links.filter("link_url = 'http://cnn.com/a.html'").collect()[0]
     assert r.anchor_offset == 3  # first occurrence, not the later duplicate
+
+
+def test_unique_list_on_a_large_page(spark):
+    """A 2000-link page with repeated and NULL urls keeps each url's first
+    occurrence, as the reference's unique_list over document order does."""
+    import random
+
+    rng = random.Random(7)
+    urls = [
+        None if rng.random() < 0.05 else f"http://h.org/{rng.randrange(600)}"
+        for _ in range(2000)
+    ]
+    # offsets are distinct but shuffled against array order
+    offsets = rng.sample(range(1, 10 * len(urls)), len(urls))
+    spans = [("link", u, "", o) for u, o in zip(urls, offsets)]
+    docs = spark.createDataFrame(
+        [("big", spans)],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    got = [(r.link_url, r.anchor_offset) for r in extract_link_spans(docs).collect()]
+
+    def unique_list(items):  # lxmlhtml.py:67-68, keyed on the url
+        seen, out = set(), []
+        for url, offset in items:
+            if url not in seen:
+                seen.add(url)
+                out.append((url, offset))
+        return out
+
+    want = unique_list(sorted(zip(urls, offsets), key=lambda p: p[1]))
+    assert len(want) < len(urls) and None in {u for u, _ in want}
+    assert sorted(got, key=repr) == sorted(want, key=repr)

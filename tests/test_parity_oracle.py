@@ -115,11 +115,14 @@ def test_frontier_state_parity(spark_run, oracle_run):
 # robots (a second per-host window or robots join would add one each).
 # Link dedup runs inside each page's row and the sequencing ranks inside
 # the range partitions, so neither shuffles (a regrouping shuffle on
-# doc_id or on the range partition id would add one job each).
-STEADY_ROUND_MAX_JOBS = {0: 18, 50: 18}
-# eager lineage cuts of one round: the dequeue cut, with_dense_seq's
-# range cut, the frontier-appends cut
-ROUND_MAX_CUTS = 3
+# doc_id or on the range partition id would add one job each). The
+# commit's writes read the frontier appends straight off the range cut
+# (a cut of their own would add one job), and the counters of both
+# metrics are one aggregate with one shuffle (one per metric adds one).
+STEADY_ROUND_MAX_JOBS = {0: 16, 50: 16}
+# eager lineage cuts of one round: the dequeue cut and with_dense_seq's
+# range cut
+ROUND_MAX_CUTS = 2
 # classes Janino compiles for round 2, measured 43 / 11 when this test
 # runs alone and 2 / 11 after the rest of this file: Spark's code cache
 # holds round 1's classes, so what compiles is the per-round literal
@@ -175,6 +178,40 @@ def test_steady_round_job_count(spark, tmp_path, monkeypatch, failure_mod):
         and len(cuts) <= ROUND_MAX_CUTS
         and compiled <= STEADY_ROUND_MAX_COMPILES
     ), (jobs, len(cuts), compiled)
+
+
+def test_round_tables_agree_on_the_appends(spark, tmp_path):
+    """The frontier, seen and counters writes each rank the round's
+    appends afresh off the range cut, so they must agree row for row: a
+    new frontier row's enqueue_seq is its fingerprint's added_seq in the
+    round's seen delta (a retry adds no seen row), the new seqs are
+    exactly [next_seq before, next_seq after), and the round's enqueued
+    counters sum to the new frontier rows."""
+    seeds = synthetic.gen_seeds(spark, N_SEEDS, n_hosts=N_HOSTS)
+    robots = synthetic.gen_robots(spark, N_HOSTS)
+    cfg = rj.CrawlConfig(n_hosts=N_HOSTS, k_per_host=K, maxdepth=MAXDEPTH, failure_mod=50)
+    fmt = rj.run_crawl(spark, str(tmp_path), seeds, robots, cfg, rounds=1)
+    prev, start = fmt.current_snapshot_id(), fmt.meta()["next_seq"]
+    round_id = rj.run_round(fmt, cfg)["round"]
+
+    def delta(table):  # set operations refuse map columns (attrs)
+        now, before = fmt.read(table), fmt.read(table, prev)
+        keep = [c for c in now.columns if c != "attrs"]
+        return now.select(keep).exceptAll(before.select(keep)).collect()
+
+    new_rows, new_seen = delta("frontier"), delta("seen")
+    added = {r.url_hash: r.added_seq for r in new_seen}
+    assert len(added) == len(new_seen)
+    retries = [r for r in new_rows if r.dont_filter]
+    assert retries and not {r.url_hash for r in retries} & set(added)
+    assert all(added[r.url_hash] == r.enqueue_seq for r in new_rows if not r.dont_filter)
+    assert sorted(r.enqueue_seq for r in new_rows) == list(range(start, fmt.meta()["next_seq"]))
+    enqueued = (
+        fmt.read("counters")
+        .filter((F.col("round_id") == round_id) & (F.col("metric") == "scheduler/enqueued"))
+        .agg(F.sum("value")).collect()[0][0]
+    )
+    assert enqueued == len(new_rows)
 
 
 def _all_disallowed(spark, n_hosts):

@@ -133,30 +133,40 @@ def test_round_regroups_no_rows_that_are_already_together(
 ):
     """A page's links dedup inside its row, so the range cut (cut B)
     shuffles nothing on doc_id; the sequencing ranks each range partition
-    where it lies, so the appends cut (cut C) has no Exchange at all."""
-    from openslack_crawler_spark.schemas import FRONTIER_SCHEMA
+    where it lies, so the frontier write reads the range cut with no
+    Exchange in between: the rank from monotonically_increasing_id is
+    only valid in the stage that reads the cut."""
+    from openslack_crawler_spark.sources.table_format import SnapshotParquetFormat
 
     hosts = 50
     seeds = synthetic.gen_seeds(spark, 3000, n_hosts=hosts)
     robots = synthetic.gen_robots(spark, hosts)
     cfg = rj.CrawlConfig(n_hosts=hosts, k_per_host=8, maxdepth=1)
-    cuts = {}
+    plans = {}
     ckpt = components._ckpt
+    commit = SnapshotParquetFormat.commit
 
     def captured(df, checkpoint_dir, eager=True):
         if "_pid" in df.columns:
-            cuts["range"] = _plan_nodes(df)
-        elif df.columns == FRONTIER_SCHEMA.fieldNames():
-            cuts["appends"] = _plan_nodes(df)
+            plans["range"] = _plan_nodes(df)
         return ckpt(df, checkpoint_dir, eager)
 
+    def committed(self, updates=None, meta=None, appends=None):
+        if appends:
+            plans["frontier"] = _plan_nodes(appends["frontier"])
+        return commit(self, updates, meta, appends)
+
     monkeypatch.setattr(components, "_ckpt", captured)
+    monkeypatch.setattr(SnapshotParquetFormat, "commit", committed)
     rj.run_crawl(spark, str(tmp_path), seeds, robots, cfg, rounds=1)
     # the range cut's plan holds the link extraction
-    assert any(name.strip() == "Generate" for name, _ in cuts["range"])
+    assert any(name.strip() == "Generate" for name, _ in plans["range"])
     doc_id_exchanges = [
-        d for name, d in cuts["range"]
+        d for name, d in plans["range"]
         if name.strip() == "Exchange" and re.search(r"hashpartitioning\([^)]*doc_id", d)
     ]
     assert doc_id_exchanges == []
-    assert [n for n, _ in cuts["appends"] if "Exchange" in n] == []
+    # the frontier write scans the range cut itself, and shuffles nothing
+    scans = [d for name, d in plans["frontier"] if name.startswith("Scan ExistingRDD")]
+    assert len(scans) == 1 and "_pid" in scans[0]
+    assert [n for n, _ in plans["frontier"] if "Exchange" in n] == []

@@ -120,8 +120,9 @@ def test_ingest_seq_dense_and_unique_across_batches(spark, tmp_path):
 # (local[4]): parse + canonicalize, dedup, seen anti-join, one
 # with_dense_seq pass and the commit's two appends (the seen read infers
 # no schema, and the frontier is not read). The sequencing ranks inside
-# its range partitions, so the appends run no shuffle
-INGEST_BATCH_MAX_JOBS = 8
+# its range partitions, so the appends run no shuffle, and both writes
+# read them straight off its range cut (a cut of their own adds one job)
+INGEST_BATCH_MAX_JOBS = 7
 
 
 def test_ingest_batch_job_count(spark, tmp_path):
